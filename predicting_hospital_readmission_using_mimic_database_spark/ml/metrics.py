@@ -22,12 +22,14 @@ scores first (bounded curve resolution, bounded shuffle) — the estimator
 everyone actually plots at 100 TB.
 
 Caching contract: the curve substrate (`_score_groups`) caches its tiny
-per-score aggregate so the plan's three consumers share one input scan.
-Each operator call creates one such cached frame; callers evaluating many
-metric sets in a long-lived session (sweeps, benches) should not loop
-these operators unboundedly without `spark.catalog.clearCache()` between
-rounds — the frames are small (distinct scores) but never auto-evicted
-until storage pressure.
+per-score aggregate so the plan's consumers (the running-sum main branch,
+its per-partition offsets, and for the curves the totals) share one
+input scan. Each operator call creates one such cached frame and hands it
+back as the returned frame's ``_aux_caches`` list (the handle
+``operators.sampling.smote`` uses for its internal caches): a caller that
+has collected the result unpersists each entry to release it at once
+(``plans/full_pipeline`` does). The frames are small (distinct scores),
+but nothing else frees them before storage pressure evicts them.
 """
 
 from __future__ import annotations
@@ -166,19 +168,51 @@ def _score_groups(
     g = base.groupBy("score").agg(
         F.sum("pos").alias("p"), F.sum(1 - F.col("pos")).alias("f")
     )
-    # the curve plan fans out into three consumers (cumsum main branch,
-    # per-partition offsets, totals); without this cache each branch
-    # re-scans the INPUT — at 100 TB that is three full reads of the fact
-    # table to rebuild a per-score frame that is tiny by construction.
+    # the curve plan fans out into two or three consumers (cumsum main
+    # branch, per-partition offsets, the curves' totals); without this
+    # cache each branch re-scans the INPUT — at 100 TB that is up to three
+    # full reads of the fact table to rebuild a per-score frame that is
+    # tiny by construction.
     # Caching the aggregate is the same physical decision SURVEY §4.2
     # makes for ML sweeps (cache small, reused intermediates).
     g = g.cache()
-    return partitioned_cumsum(g, ["score"], ["p", "f"], descending=True)
+    out = partitioned_cumsum(g, ["score"], ["p", "f"], descending=True)
+    out._aux_caches = [g]
+    return out
 
 
 def _totals(groups: DataFrame) -> DataFrame:
     # names avoid Spark's case-insensitive collision with per-group p/f
     return groups.agg(F.sum("p").alias("tot_p"), F.sum("f").alias("tot_n"))
+
+
+def _with_caches(out: DataFrame, groups: DataFrame) -> DataFrame:
+    """Hand ``groups``' cached per-score frame to the caller (module
+    docstring, caching contract)."""
+    out._aux_caches = groups._aux_caches
+    return out
+
+
+def _auc_sums() -> list[Column]:
+    """The telescoped ROC trapezoid and step AUC-PR numerators, plus the
+    class totals, as aggregates over the per-score frame: the totals are
+    plain sums of p/f in the SAME aggregate, so no separate totals branch
+    (a broadcast cross join, one more job per exchange under AQE)."""
+    return [
+        F.sum(F.col("f") * (F.col("cum_p") - F.col("p") / 2.0)).alias("s_roc"),
+        F.sum(
+            F.col("p") * (F.col("cum_p") / (F.col("cum_p") + F.col("cum_f")))
+        ).alias("s_pr"),
+        F.sum("p").alias("n_pos"),
+        F.sum("f").alias("n_neg"),
+    ]
+
+
+def _auc_cols() -> list[Column]:
+    return [
+        F.round(F.try_divide(F.col("s_roc"), F.col("n_pos") * F.col("n_neg")), 6).alias("roc_auc"),
+        F.round(F.try_divide(F.col("s_pr"), F.col("n_pos")), 6).alias("pr_auc"),
+    ]
 
 
 def roc_points(
@@ -189,11 +223,11 @@ def roc_points(
     positive), no driver collect (py:508-509)."""
     g = _score_groups(df, score, label, n_bins)
     t = _totals(g)
-    return g.crossJoin(F.broadcast(t)).select(
+    return _with_caches(g.crossJoin(F.broadcast(t)).select(
         F.round("score", 6).alias("threshold"),
         F.round(F.try_divide(F.col("cum_f"), F.col("tot_n")), 6).alias("fpr"),
         F.round(F.try_divide(F.col("cum_p"), F.col("tot_p")), 6).alias("tpr"),
-    )
+    ), g)
 
 
 def pr_points(
@@ -202,11 +236,11 @@ def pr_points(
     """E3 — precision/recall curve points (py:846)."""
     g = _score_groups(df, score, label, n_bins)
     t = _totals(g)
-    return g.crossJoin(F.broadcast(t)).select(
+    return _with_caches(g.crossJoin(F.broadcast(t)).select(
         F.round("score", 6).alias("threshold"),
         F.round(F.try_divide(F.col("cum_p"), F.col("tot_p")), 6).alias("recall"),
         F.round(F.col("cum_p") / (F.col("cum_p") + F.col("cum_f")), 6).alias("precision"),
-    )
+    ), g)
 
 
 def auc_metrics(
@@ -217,20 +251,7 @@ def auc_metrics(
     ``average_precision_score``), as ONE aggregation over the per-score
     frame. No lag/lead: the trapezoid telescopes (module docstring)."""
     g = _score_groups(df, score, label, n_bins)
-    t = _totals(g)
-    gx = g.crossJoin(F.broadcast(t))
-    agg = gx.agg(
-        F.sum(F.col("f") * (F.col("cum_p") - F.col("p") / 2.0)).alias("s_roc"),
-        F.sum(
-            F.col("p") * (F.col("cum_p") / (F.col("cum_p") + F.col("cum_f")))
-        ).alias("s_pr"),
-        F.first("tot_p").alias("n_pos"),
-        F.first("tot_n").alias("n_neg"),
-    )
-    return agg.select(
-        F.round(F.try_divide(F.col("s_roc"), F.col("n_pos") * F.col("n_neg")), 6).alias("roc_auc"),
-        F.round(F.try_divide(F.col("s_pr"), F.col("n_pos")), 6).alias("pr_auc"),
-    )
+    return _with_caches(g.agg(*_auc_sums()).select(*_auc_cols()), g)
 
 
 def auc_with_battery(
@@ -265,27 +286,16 @@ def auc_with_battery(
             "for a binned AUC approximation"
         )
     g = _score_groups(df, score, label, n_bins)
-    t = _totals(g)
-    gx = g.crossJoin(F.broadcast(t))
     pred = (F.col("score") > F.lit(thresh)).cast("long")
-    agg = gx.agg(
-        F.sum(F.col("f") * (F.col("cum_p") - F.col("p") / 2.0)).alias("s_roc"),
-        F.sum(
-            F.col("p") * (F.col("cum_p") / (F.col("cum_p") + F.col("cum_f")))
-        ).alias("s_pr"),
-        F.first("tot_p").alias("n_pos"),
-        F.first("tot_n").alias("n_neg"),
+    agg = g.agg(
+        *_auc_sums(),
         F.sum(pred * F.col("p")).alias("tp"),
         F.sum(pred * F.col("f")).alias("fp"),
         F.sum((1 - pred) * F.col("p")).alias("fn"),
         F.sum((1 - pred) * F.col("f")).alias("tn"),
     )
-    cells = agg.select(
-        F.round(F.try_divide(F.col("s_roc"), F.col("n_pos") * F.col("n_neg")), 6).alias("roc_auc"),
-        F.round(F.try_divide(F.col("s_pr"), F.col("n_pos")), 6).alias("pr_auc"),
-        "tp", "fp", "fn", "tn",
-    )
-    return _derived_metrics(cells)
+    cells = agg.select(*_auc_cols(), "tp", "fp", "fn", "tn")
+    return _with_caches(_derived_metrics(cells), g)
 
 
 def psi_bins(

@@ -282,10 +282,15 @@ def smote(
 
     ``target_ratio=None`` (default) emits every kNN interpolation —
     synthetic count <= k * |minority|. ``target_ratio=r`` matches
-    imblearn's ``ratio=r`` (py:683-684,772): a seeded exact-n sample of
-    the synthetic pool so that minority + synthetics = r * |majority| —
-    exactly the deficit at r=1. If the pool is smaller than the deficit
-    (k too small), the whole pool is kept.
+    imblearn's ``ratio=r`` (py:683-684,772): minority + synthetics =
+    r * |majority| — exactly the deficit at r=1, whatever k is. Each
+    neighbour pair is interpolated ``ceil(deficit / (k * |minority|))``
+    times (k capped at |minority| - 1), each repeat with its own ``u``
+    and id, so the pool covers the deficit; then a seeded exact-n sample
+    of the pool is kept. Only a
+    pool short of its k neighbours per row (``method="lsh"`` recall, or
+    fewer than k+1 minority rows) can fall short; then the whole pool
+    is kept.
     """
     from .similarity import brp_knn_pairs, knn_join_broadcast, tune_brp_params
 
@@ -305,6 +310,26 @@ def smote(
             "feature array on the first row) — nothing to interpolate"
         )
     dim = len(first[0])
+    reps = 1
+    if target_ratio is not None:
+        counts = (
+            df.groupBy(F.col(label_col).alias("__lab"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        )
+        n_min = sum(r["n"] for r in counts if r["__lab"] == minority_value)
+        n_maj = max(
+            (r["n"] for r in counts if r["__lab"] != minority_value), default=0
+        )
+        deficit = max(0, int(round(target_ratio * n_maj)) - n_min)
+        if deficit == 0:
+            # already at (or past) the target ratio: imblearn emits no
+            # synthetics — skip the whole kNN/interpolation pipeline
+            out = df.select(id_col, array_col, label_col)
+            out._aux_caches = [mino]
+            return out
+        per_row = max(1, min(k, n_min - 1))
+        reps = max(1, -(-deficit // (per_row * n_min)))
     if method == "exact":
         knn = knn_join_broadcast(
             mino, mino, id_col, array_col, k=k, exclude_self=True
@@ -330,10 +355,14 @@ def smote(
     synth = (
         knn.join(a, "a_id")
         .join(b, "b_id")
+        .withColumn("__rep", F.explode(F.sequence(F.lit(0), F.lit(reps - 1))))
         .withColumn("__u", F.rand(seed))
         .select(
-            # negative synthetic ids, unique per (a, rank)
-            (-(F.col("a_id") * (k + 1) + F.col("rank")) - 1).alias(id_col),
+            # negative synthetic ids, unique per (a, rank, rep)
+            (
+                -((F.col("a_id") * (k + 1) + F.col("rank")) * reps + F.col("__rep"))
+                - 1
+            ).alias(id_col),
             F.zip_with(
                 "__arr_a",
                 "__arr_b",
@@ -345,22 +374,6 @@ def smote(
     if target_ratio is not None:
         from .relational import global_index
 
-        counts = (
-            df.groupBy(F.col(label_col).alias("__lab"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        )
-        n_min = sum(r["n"] for r in counts if r["__lab"] == minority_value)
-        n_maj = max(
-            (r["n"] for r in counts if r["__lab"] != minority_value), default=0
-        )
-        deficit = max(0, int(round(target_ratio * n_maj)) - n_min)
-        if deficit == 0:
-            # already at (or past) the target ratio: imblearn emits no
-            # synthetics — skip the whole kNN/interpolation pipeline
-            out = df.select(id_col, array_col, label_col)
-            out._aux_caches = [mino]
-            return out
         # cache the pool FIRST: global_index makes two passes (partition
         # counts + rejoin) and the final union a third — without this
         # cache each pass re-runs the whole LSH-kNN pipeline

@@ -16,6 +16,16 @@ Plan shape: ONE shuffle on user_id covers the label window and the
 per-user aggregation (same key); the pivot uses explicit values (single
 pass); the assembled training set is cached before tree induction
 (SURVEY §4.2).
+
+Session: every frame derives from the ``events`` scan that
+:func:`_pipeline_events` reads on ``session.small_plan_spark``'s session.
+Below ``$SPARK_GRAFT_SMALL_PLAN_BYTES`` of input that is the byte-gated
+AQE-off clone the lakehouse DML ops use: the pipeline is dozens of
+fixed-shape micro-plans (fits, resamplers, metric aggregates), where AQE's
+per-exchange stage materialization is one driver job per shuffle with
+nothing to re-plan. Above the gate it is the caller's AQE session,
+unchanged. The returned summary frame is always built on the caller's
+session.
 """
 
 from __future__ import annotations
@@ -27,6 +37,7 @@ from ..ml import metrics as ME
 from ..ml import models as MO
 from ..ml.features import assemble_features, numeric_columns
 from ..operators import sampling as SA
+from ..session import small_plan_spark
 from ..sources.io import read_table
 from .readmission import readmit_labels
 
@@ -40,13 +51,31 @@ FREQUENT_READMIT_DAYS = 0.56  # ~median per-user mean gap-to-next-unplanned
 ROWS_PER_FIT_PARTITION = 50_000
 
 
-def _fit_partitions(n_rows: int, current: int) -> int:
+def _fit_partitions(n_rows: int) -> int:
     """Size-derived partition count for iterative-fit frames: enough
-    partitions for the data volume, never more than the frame already has
-    (coalesce cannot add), never zero."""
+    partitions for the data volume, never zero. ``coalesce`` never adds
+    partitions, so a frame that already has fewer keeps its own."""
     import math
 
-    return max(1, min(current, math.ceil(n_rows / ROWS_PER_FIT_PARTITION)))
+    return max(1, math.ceil(n_rows / ROWS_PER_FIT_PARTITION))
+
+
+def _pipeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` scan every pipeline frame derives from, read on
+    ``small_plan_spark``'s session: gated on Spark's own size statistic
+    for the scan (from the file listing — no job runs)."""
+    events = read_table(spark, sf_dir, "events")
+    est = events._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    sess = small_plan_spark(spark, est_bytes=int(est))
+    return events if sess is spark else read_table(sess, sf_dir, "events")
+
+
+def _release(*frames) -> None:
+    """Release the internal caches an operator hands back on its result
+    (``_aux_caches``); ``None`` entries are skipped."""
+    for df in frames:
+        for aux in getattr(df, "_aux_caches", ()):
+            aux.unpersist()
 
 
 def user_feature_table(events: DataFrame) -> DataFrame:
@@ -91,15 +120,36 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
     five-strategy table): L1 logistic regression trained under each
     class-imbalance strategy — base / random undersample / random
     oversample / SMOTE / NearMiss — evaluated on ONE held-out test split
-    with the engine's own AUC + battery. One row per strategy.
+    with the engine's own AUC + battery. One row per strategy. Every frame
+    the comparison caches is released before it returns.
     """
+    pinned: list[DataFrame] = []
+    try:
+        rows = _strategy_rows(spark, sf_dir, seed, pinned)
+    finally:
+        for df in pinned:
+            df.unpersist()
+    return spark.createDataFrame(
+        rows,
+        "strategy string, n_train long, auc double, accuracy double, "
+        "recall double, precision double, f1 double",
+    )
+
+
+def _strategy_rows(
+    spark: SparkSession, sf_dir: str, seed: int, pinned: list[DataFrame]
+) -> list[tuple]:
+    """:func:`strategy_comparison`'s rows; every frame it caches and does
+    not release itself is appended to ``pinned`` for the caller to
+    release."""
     from pyspark.ml.functions import array_to_vector
 
-    events = read_table(spark, sf_dir, "events")
+    events = _pipeline_events(spark, sf_dir)
     # cache the per-user table (tiny): the standardization stats agg and
     # the base projection below are two consumers — uncached, each re-runs
     # the whole window+agg chain over the fact table
     table = user_feature_table(events).cache()
+    pinned.append(table)
     feat_cols = [c for c in numeric_columns(table, exclude=("user_id", "label"))]
     # standardize: mixed feature scales (tenure in days vs event counts)
     # would dominate both the L1 penalty and the kNN euclidean metric;
@@ -129,6 +179,7 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
     # pool: five threads racing a cold cache each recompute the chain
     # (cache blocks populate per-partition without coordination).
     base = base.cache()
+    pinned.append(base)
     base.count()
     table.unpersist()  # everything downstream reads base's cache
     # hash-stratified: GUARANTEES the held-out side keeps both classes at
@@ -136,6 +187,7 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
     # single class and leave every strategy's AUC undefined (sf0.001)
     train, test = SA.stratified_hash_split(base, "y", "user_id", 0.2)
     train = train.cache()
+    pinned.append(train)
     train.count()
     # every strategy scores this same frame (three actions each) — without
     # the cache the whole feature chain (windows + pivot + joins) re-runs
@@ -148,7 +200,8 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
         .withColumn("y", F.col("y").cast("double"))
         .cache()
     )
-    test_v = test_v.coalesce(_fit_partitions(test_v.count(), test_v.rdd.getNumPartitions()))
+    pinned.append(test_v)  # the cached frame: the coalesced one is a new plan
+    test_v = test_v.coalesce(_fit_partitions(test_v.count()))
 
     # threshold/bucket_length omitted -> smote/nearmiss auto-tune them from
     # the sampled kNN-distance quantile of THIS frame (no hand constants)
@@ -158,8 +211,11 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
         ("base", lambda: train),
         ("undersample", lambda: SA.balance_undersample(train, "y", seed=seed)),
         ("oversample", lambda: SA.oversample_with_replacement(train, "y", seed=seed)),
+        # target_ratio=1.0: imblearn's 1:1 default (py:772), like the other
+        # resamplers — k alone yields at most k rows per minority row
         ("smote", lambda: SA.smote(
-            train, "user_id", "arr", "y", minority_value=1, k=2, seed=seed, **knn_kwargs
+            train, "user_id", "arr", "y", minority_value=1, k=2, seed=seed,
+            target_ratio=1.0, **knn_kwargs
         )),
         ("nearmiss", lambda: SA.nearmiss(
             train, "user_id", "arr", "y", minority_value=1, k=3, seed=seed, **knn_kwargs
@@ -175,21 +231,22 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
             .cache()  # consumed by the fit AND the count — SMOTE/NearMiss
             # kNN must not re-run per action
         )
+        battery = None
         try:
             n = trv.count()
-            fit_df = trv.coalesce(_fit_partitions(n, trv.rdd.getNumPartitions()))
+            fit_df = trv.coalesce(_fit_partitions(n))
             model = MO.train_lr_l1(fit_df, C=10.0, features="features", label="y", max_iter=25)
             scored = MO.predict_proba(model, test_v)
             # one fused pass: AUC + battery from the same per-score frame
             # (scored is scanned once, not once per metric family)
-            m = ME.auc_with_battery(scored, "p1", "y", 0.5).collect()[0]
+            battery = ME.auc_with_battery(scored, "p1", "y", 0.5)
+            m = battery.collect()[0]
         finally:
             # five strategies run concurrently: leaving each trv (and
-            # smote's internal minority cache) pinned can evict the shared
-            # base/train/test_v blocks mid-run at larger sfs
+            # smote's / the battery's internal caches) pinned can evict the
+            # shared base/train/test_v blocks mid-run at larger sfs
             trv.unpersist()
-            for aux in getattr(made, "_aux_caches", ()):
-                aux.unpersist()
+            _release(made, battery)
         return (name, n, m["roc_auc"], m["accuracy"], m["recall"],
                 m["precision"], m["f1"])
 
@@ -200,12 +257,7 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=len(strategies)) as ex:
-        rows = list(ex.map(evaluate, strategies))
-    return spark.createDataFrame(
-        rows,
-        "strategy string, n_train long, auc double, accuracy double, "
-        "recall double, precision double, f1 double",
-    )
+        return list(ex.map(evaluate, strategies))
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
@@ -213,35 +265,43 @@ def run_pipeline(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
     counts, prevalence, the balanced-train check, held-out AUC, and the
     reference's FULL threshold battery at 0.5 (accuracy / recall /
     precision / specificity / prevalence / f1 — py:508-534)."""
-    events = read_table(spark, sf_dir, "events")
+    events = _pipeline_events(spark, sf_dir)
     # the per-user table feeds FOUR consumers (assembled train/test chain,
     # n_users, prevalence) — cache it or the window+pivot+join chain
     # re-runs per action; per-user rows are small relative to events
     table = user_feature_table(events).cache()
+    train_bal = battery = None
+    try:
+        feat_cols = [c for c in numeric_columns(table, exclude=("user_id", "label"))]
+        assembled = assemble_features(
+            table.select("user_id", *feat_cols, F.col("label").cast("double").alias("y")),
+            feat_cols,
+        )
 
-    feat_cols = [c for c in numeric_columns(table, exclude=("user_id", "label"))]
-    assembled = assemble_features(
-        table.select("user_id", *feat_cols, F.col("label").cast("double").alias("y")),
-        feat_cols,
-    )
+        # hash-stratified on user_id: both classes guaranteed on both sides
+        # at any scale (a Bernoulli split can empty a small class's test side)
+        train, test = SA.stratified_hash_split(assembled, "y", "user_id", 0.2)
+        train_bal = SA.balance_undersample(train, "y", seed=seed).cache()
 
-    # hash-stratified on user_id: both classes guaranteed on both sides
-    # at any scale (a Bernoulli split can empty a small class's test side)
-    train, test = SA.stratified_hash_split(assembled, "y", "user_id", 0.2)
-    train_bal = SA.balance_undersample(train, "y", seed=seed).cache()
+        model = MO.train_rf(train_bal, "features", "y", num_trees=50, seed=seed)
+        scored = MO.predict_proba(model, test)
 
-    model = MO.train_rf(train_bal, "features", "y", num_trees=50, seed=seed)
-    scored = MO.predict_proba(model, test)
-
-    m = ME.auc_with_battery(scored, "p1", "y", 0.5).collect()[0]
-    # one aggregate job per frame: n_users+prevalence fuse over the
-    # cached per-user table, and the balanced-train total is the sum of
-    # the per-class counts already collected for the balance check
-    trow = table.agg(
-        F.count("*").alias("n"), F.round(F.avg("label"), 4).alias("prev")
-    ).collect()[0]
-    n_users, prevalence = trow["n"], trow["prev"]
-    cls = [r["n"] for r in train_bal.groupBy("y").agg(F.count("*").alias("n")).collect()]
+        battery = ME.auc_with_battery(scored, "p1", "y", 0.5)
+        m = battery.collect()[0]
+        # one aggregate job per frame: n_users+prevalence fuse over the
+        # cached per-user table, and the balanced-train total is the sum of
+        # the per-class counts already collected for the balance check
+        trow = table.agg(
+            F.count("*").alias("n"), F.round(F.avg("label"), 4).alias("prev")
+        ).collect()[0]
+        n_users, prevalence = trow["n"], trow["prev"]
+        cls = [r["n"] for r in train_bal.groupBy("y").agg(F.count("*").alias("n")).collect()]
+        n_test = scored.count()
+    finally:
+        for df in (table, train_bal):
+            if df is not None:
+                df.unpersist()
+        _release(battery)
 
     return spark.createDataFrame(
         [
@@ -250,7 +310,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
                 float(prevalence),
                 sum(cls),
                 bool(len(cls) > 1 and max(cls) == min(cls)),
-                scored.count(),
+                n_test,
                 m["roc_auc"],
                 m["accuracy"],
                 m["recall"],

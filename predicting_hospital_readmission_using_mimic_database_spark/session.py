@@ -39,9 +39,13 @@ def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime confs to an existing session (idempotent).
 
     Called by every operator entry point so the engine behaves the same
-    whether it builds the session or is handed one.
+    whether it builds the session or is handed one. A session clone
+    (:func:`_clone`) keeps its own overrides on top of the baseline, so
+    re-tuning it (``sources.io.read_table`` does, per read) never turns
+    AQE back on under an AQE-off clone.
     """
-    for k, v in _RUNTIME_CONFS.items():
+    confs = {**_RUNTIME_CONFS, **getattr(spark, "_clone_confs", {})}
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
@@ -91,6 +95,26 @@ def get_spark(
 # loop-scoped session tuning for fixed-shape iterative operators
 # ----------------------------------------------------------------------
 from contextlib import contextmanager  # noqa: E402
+
+
+def _clone(
+    base: SparkSession, overrides: dict, shuffle_partitions: int | None
+) -> SparkSession:
+    """The one session-clone recipe behind :func:`loop_session` and
+    :func:`small_plan_spark`: ``newSession()`` (shared SparkContext,
+    block and cache managers; its own SQLConf), brought to the engine
+    baseline, then the caller's time zone, ``overrides`` and the
+    shuffle-partition pin. The overrides are remembered on the clone, so
+    a later :func:`tune_session` re-applies them over the baseline."""
+    confs = {
+        "spark.sql.session.timeZone": base.conf.get("spark.sql.session.timeZone"),
+        **overrides,
+    }
+    if shuffle_partitions:
+        confs["spark.sql.shuffle.partitions"] = str(max(1, int(shuffle_partitions)))
+    sess = base.newSession()
+    sess._clone_confs = confs
+    return tune_session(sess)
 
 
 @contextmanager
@@ -143,28 +167,17 @@ def loop_session(
     import uuid
 
     base = frames[0].sparkSession
-    sess = tune_session(base.newSession())
-    sess.conf.set(
-        "spark.sql.session.timeZone",
-        base.conf.get("spark.sql.session.timeZone"),
-    )
     if skew_join:
-        # keep AQE (skew-join splitting needs it) but pin partitions
-        # exactly: coalescing would undo the input-derived pin
-        sess.conf.set(
-            "spark.sql.adaptive.coalescePartitions.enabled", "false"
-        )
-        # split skewed partitions even when that adds an extra shuffle
-        sess.conf.set(
-            "spark.sql.adaptive.forceOptimizeSkewedJoin", "true"
-        )
+        overrides = {
+            # keep AQE (skew-join splitting needs it) but pin partitions
+            # exactly: coalescing would undo the input-derived pin
+            "spark.sql.adaptive.coalescePartitions.enabled": "false",
+            # split skewed partitions even when that adds an extra shuffle
+            "spark.sql.adaptive.forceOptimizeSkewedJoin": "true",
+        }
     else:
-        sess.conf.set("spark.sql.adaptive.enabled", "false")
-    if shuffle_partitions:
-        sess.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(max(1, int(shuffle_partitions))),
-        )
+        overrides = {"spark.sql.adaptive.enabled": "false"}
+    sess = _clone(base, overrides, shuffle_partitions)
     tag = f"loop_{uuid.uuid4().hex}"
     names: list[str] = []
     try:
@@ -266,14 +279,9 @@ def small_plan_spark(
     needed (the clone is garbage once the op returns)."""
     if est_bytes is None or est_bytes > _SMALL_PLAN_BYTES:
         return spark
-    sess = tune_session(spark.newSession())
-    sess.conf.set(
-        "spark.sql.session.timeZone",
-        spark.conf.get("spark.sql.session.timeZone"),
+    return _clone(
+        spark, {"spark.sql.adaptive.enabled": "false"}, _plan_pin(est_bytes)
     )
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set("spark.sql.shuffle.partitions", str(_plan_pin(est_bytes)))
-    return sess
 
 
 def adopt_frame(base: SparkSession, df):

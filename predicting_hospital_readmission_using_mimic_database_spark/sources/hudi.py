@@ -390,8 +390,10 @@ def _replaced_groups(root: str, as_of: str | None) -> set[tuple[str, str]]:
 
 
 def hudi_commits(root: str) -> list[str]:
-    """Completed commit instants, ascending — the timeline surface."""
-    return sorted(_completed_commits(root))
+    """Completed commit instants, ascending — the timeline surface
+    (deltacommits count on a MERGE_ON_READ table)."""
+    ttype = _properties(root).get("hoodie.table.type", "COPY_ON_WRITE")
+    return sorted(_completed_commits(root, allow_delta=ttype == "MERGE_ON_READ"))
 
 
 def read_hudi_incremental(

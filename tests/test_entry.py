@@ -114,7 +114,9 @@ def test_e2e_pipeline_smoke_structure(spark):
     quality — a 3-row test set's AUC is coin-flip noise."""
     from predicting_hospital_readmission_using_mimic_database_spark.plans.full_pipeline import run_pipeline
 
+    n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
     row = run_pipeline(spark, "/root/testdata/sf0.001", seed=42).collect()[0]
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
     assert row["n_users"] > 0 and row["n_test"] > 0
     assert 0.2 <= row["prevalence"] <= 0.8  # real two-class task
     assert row["auc"] is not None and 0.0 <= row["auc"] <= 1.0
@@ -129,16 +131,42 @@ def test_e2e_pipeline_learns_signal(spark):
     assert row["auc"] is not None and row["auc"] > 0.6
 
 
-def test_strategy_comparison_shape(spark):
+def test_strategy_comparison_shape(spark, monkeypatch):
+    """The five strategy rows, in both regimes of the small-plan gate: at
+    0 bytes the caller's AQE session builds every frame, at 1 TiB the
+    AQE-off clone does. Same strategy order, the same deterministic train
+    sizes (hash split; exact-kNN NearMiss), metrics in [0, 1], and no
+    cache left behind."""
+    from predicting_hospital_readmission_using_mimic_database_spark import session
     from predicting_hospital_readmission_using_mimic_database_spark.plans.full_pipeline import strategy_comparison
 
-    rows = strategy_comparison(spark, "/root/testdata/sf0.001", seed=42).collect()
-    assert [r["strategy"] for r in rows] == [
+    clones = []
+    real_clone = session._clone
+
+    def counting_clone(*a, **kw):
+        clones.append(a[1])
+        return real_clone(*a, **kw)
+
+    monkeypatch.setattr(session, "_clone", counting_clone)
+    out = {}
+    for gate in (0, 1 << 40):
+        monkeypatch.setattr(session, "_SMALL_PLAN_BYTES", gate)
+        n_cached = spark.sparkContext._jsc.getPersistentRDDs().size()
+        out[gate] = {r["strategy"]: r for r in strategy_comparison(
+            spark, "/root/testdata/sf0.001", seed=42).collect()}
+        assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_cached
+        assert len(clones) == (0 if gate == 0 else 1)
+    assert clones == [{"spark.sql.adaptive.enabled": "false"}]
+    aqe, clone = out[0], out[1 << 40]
+    assert list(aqe) == list(clone) == [
         "base", "undersample", "oversample", "smote", "nearmiss"
     ]
-    for r in rows:
-        assert r["n_train"] > 0
-        assert r["auc"] is None or 0.0 <= r["auc"] <= 1.0
+    for name in ("base", "nearmiss"):
+        assert aqe[name]["n_train"] == clone[name]["n_train"]
+    for rows in (aqe, clone):
+        for r in rows.values():
+            for k in ("auc", "accuracy", "recall", "precision", "f1"):
+                assert r[k] is not None and 0.0 <= r[k] <= 1.0, (r["strategy"], k)
 
 
 def test_priority_names_all_registered():

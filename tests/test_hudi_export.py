@@ -9,6 +9,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from predicting_hospital_readmission_using_mimic_database_spark.sources.hudi import (
+    HudiProtocolError,
     hudi_commits,
     read_hudi,
     read_hudi_incremental,
@@ -379,6 +380,28 @@ def test_mor_export_log_appends(spark, tmp_path):
     export_hudi(t, dest, table_type="MERGE_ON_READ")
     with pytest.raises(ValueError, match="mix table types"):
         export_hudi(t, dest)
+
+
+def test_hudi_commits_lists_mor_timeline(spark, tmp_path):
+    """hudi_commits on a MERGE_ON_READ table lists its deltacommits (a
+    COPY_ON_WRITE timeline holding one is still malformed)."""
+    t = SnapshotTable.create(
+        spark, str(tmp_path / "t"), "k bigint, v double",
+        bucket_key=["k"], num_buckets=2,
+    )
+    t.append(spark.range(8).select(F.col("id").alias("k"), (F.col("id") * 1.0).alias("v")))
+    dest = str(tmp_path / "mor")
+    i1 = export_hudi(t, dest, table_type="MERGE_ON_READ")
+    t.merge(spark.createDataFrame([(3, 30.0), (9, 9.0)], "k bigint, v double"))
+    i2 = export_hudi(t, dest, table_type="MERGE_ON_READ")
+    assert hudi_commits(dest) == [i1, i2]
+    props = os.path.join(dest, ".hoodie", "hoodie.properties")
+    with open(props) as f:
+        text = f.read()
+    with open(props, "w") as f:
+        f.write(text.replace("MERGE_ON_READ", "COPY_ON_WRITE"))
+    with pytest.raises(HudiProtocolError, match="deltacommit"):
+        hudi_commits(dest)
 
 
 def test_mor_compaction(spark, tmp_path):

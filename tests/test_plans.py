@@ -82,3 +82,19 @@ def test_unpartitioned_window_detector(spark):
         )
     )
     assert count_unpartitioned_windows(_plan(capped)) == (0, 0, 1)
+
+
+def test_small_plan_clone_survives_read_table(spark):
+    """read_table re-tunes the session it reads on; on a small-plan clone
+    that must keep the clone's AQE-off override and partition pin, and the
+    caller's session must stay untouched."""
+    from predicting_hospital_readmission_using_mimic_database_spark.session import small_plan_spark
+
+    caller_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    sess = small_plan_spark(spark, est_bytes=1)
+    assert sess is not spark
+    df = read_table(sess, SF, "events").groupBy("event_type").count()
+    assert sess.conf.get("spark.sql.adaptive.enabled") == "false"
+    assert sess.conf.get("spark.sql.shuffle.partitions") == "1"
+    assert "AdaptiveSparkPlan" not in _plan(df)
+    assert spark.conf.get("spark.sql.adaptive.enabled") == caller_aqe

@@ -102,6 +102,23 @@ def test_smote_target_ratio_exact_deficit(spark):
     assert out.filter(F.col("id") < 0).count() == 8
 
 
+def test_smote_target_ratio_beyond_k_pool(spark):
+    """A deficit larger than the k * |minority| interpolation pool still
+    balances exactly (imblearn ratio=1 whatever k is): k=2 on a 1:14
+    frame gives exactly 2 x majority rows, and every synthetic id is
+    negative and unique."""
+    df = _toy(spark, n_pos=6, n_neg=84)  # deficit 78 > k*n_min = 12
+    out = SA.smote(df, "id", "arr", "lab", minority_value=1, k=2, seed=5,
+                   target_ratio=1.0)
+    assert out.count() == 2 * 84
+    counts = {r["lab"]: r["n"] for r in out.groupBy("lab").agg(F.count("*").alias("n")).collect()}
+    assert counts == {0: 84, 1: 84}
+    ids = [r["id"] for r in out.filter(F.col("id") < 0).select("id").collect()]
+    assert len(ids) == 78 and len(set(ids)) == 78
+    orig = {r["id"] for r in df.select("id").collect()}
+    assert not orig & set(ids)
+
+
 def test_smote_target_ratio_zero_deficit(spark):
     """Already-balanced input: target_ratio=1.0 emits NO synthetics."""
     df = _toy(spark, n_pos=6, n_neg=6)
