@@ -24,12 +24,15 @@ everyone actually plots at 100 TB.
 Caching contract: the curve substrate (`_score_groups`) caches its tiny
 per-score aggregate so the plan's consumers (the running-sum main branch,
 its per-partition offsets, and for the curves the totals) share one
-input scan. Each operator call creates one such cached frame and hands it
-back as the returned frame's ``_aux_caches`` list (the handle
-``operators.sampling.smote`` uses for its internal caches): a caller that
-has collected the result unpersists each entry to release it at once
-(``plans/full_pipeline`` does). The frames are small (distinct scores),
-but nothing else frees them before storage pressure evicts them.
+input scan. Each operator call creates one such cached frame. The frames
+are small (distinct scores), but nothing frees them before storage
+pressure evicts them: callers evaluating many metric sets in a long-lived
+session should not loop these operators unboundedly without
+``spark.catalog.clearCache()`` between rounds. ``auc_with_battery``, the
+one a sweep calls per model, hands its frame back as the result's
+``_aux_caches`` list (the handle ``operators.sampling.smote`` uses for its
+internal caches): a caller that has collected the result releases it at
+once with ``sampling.release_aux_caches`` (``plans/full_pipeline`` does).
 """
 
 from __future__ import annotations
@@ -186,13 +189,6 @@ def _totals(groups: DataFrame) -> DataFrame:
     return groups.agg(F.sum("p").alias("tot_p"), F.sum("f").alias("tot_n"))
 
 
-def _with_caches(out: DataFrame, groups: DataFrame) -> DataFrame:
-    """Hand ``groups``' cached per-score frame to the caller (module
-    docstring, caching contract)."""
-    out._aux_caches = groups._aux_caches
-    return out
-
-
 def _auc_sums() -> list[Column]:
     """The telescoped ROC trapezoid and step AUC-PR numerators, plus the
     class totals, as aggregates over the per-score frame: the totals are
@@ -223,11 +219,11 @@ def roc_points(
     positive), no driver collect (py:508-509)."""
     g = _score_groups(df, score, label, n_bins)
     t = _totals(g)
-    return _with_caches(g.crossJoin(F.broadcast(t)).select(
+    return g.crossJoin(F.broadcast(t)).select(
         F.round("score", 6).alias("threshold"),
         F.round(F.try_divide(F.col("cum_f"), F.col("tot_n")), 6).alias("fpr"),
         F.round(F.try_divide(F.col("cum_p"), F.col("tot_p")), 6).alias("tpr"),
-    ), g)
+    )
 
 
 def pr_points(
@@ -236,11 +232,11 @@ def pr_points(
     """E3 — precision/recall curve points (py:846)."""
     g = _score_groups(df, score, label, n_bins)
     t = _totals(g)
-    return _with_caches(g.crossJoin(F.broadcast(t)).select(
+    return g.crossJoin(F.broadcast(t)).select(
         F.round("score", 6).alias("threshold"),
         F.round(F.try_divide(F.col("cum_p"), F.col("tot_p")), 6).alias("recall"),
         F.round(F.col("cum_p") / (F.col("cum_p") + F.col("cum_f")), 6).alias("precision"),
-    ), g)
+    )
 
 
 def auc_metrics(
@@ -251,7 +247,7 @@ def auc_metrics(
     ``average_precision_score``), as ONE aggregation over the per-score
     frame. No lag/lead: the trapezoid telescopes (module docstring)."""
     g = _score_groups(df, score, label, n_bins)
-    return _with_caches(g.agg(*_auc_sums()).select(*_auc_cols()), g)
+    return g.agg(*_auc_sums()).select(*_auc_cols())
 
 
 def auc_with_battery(
@@ -295,7 +291,9 @@ def auc_with_battery(
         F.sum((1 - pred) * F.col("f")).alias("tn"),
     )
     cells = agg.select(*_auc_cols(), "tp", "fp", "fn", "tn")
-    return _with_caches(_derived_metrics(cells), g)
+    out = _derived_metrics(cells)
+    out._aux_caches = g._aux_caches
+    return out
 
 
 def psi_bins(

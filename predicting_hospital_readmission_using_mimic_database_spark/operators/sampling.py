@@ -394,9 +394,19 @@ def smote(
     out = df.select(id_col, array_col, label_col).unionByName(synth)
     # these caches stay pinned for the lifetime of the returned (lazy)
     # frame; callers that fully materialize the result can release them
-    # afterwards via this attribute (plans/full_pipeline does)
+    # afterwards with release_aux_caches (plans/full_pipeline does)
     out._aux_caches = aux_caches
     return out
+
+
+def release_aux_caches(*frames) -> None:
+    """Unpersist the internal caches an operator hands back on its lazy
+    result as ``_aux_caches`` (:func:`smote`, ``metrics.auc_with_battery``),
+    once the caller has materialized that result; ``None`` and frames
+    without the attribute are skipped."""
+    for df in frames:
+        for aux in getattr(df, "_aux_caches", ()):
+            aux.unpersist()
 
 
 def nearmiss(

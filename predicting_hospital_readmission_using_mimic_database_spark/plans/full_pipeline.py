@@ -70,14 +70,6 @@ def _pipeline_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return events if sess is spark else read_table(sess, sf_dir, "events")
 
 
-def _release(*frames) -> None:
-    """Release the internal caches an operator hands back on its result
-    (``_aux_caches``); ``None`` entries are skipped."""
-    for df in frames:
-        for aux in getattr(df, "_aux_caches", ()):
-            aux.unpersist()
-
-
 def user_feature_table(events: DataFrame) -> DataFrame:
     """Per-user modeling table: pivot counts + value stats + tenure +
     label = "frequent readmitter" (mean gap to next unplanned event under
@@ -123,9 +115,124 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
     with the engine's own AUC + battery. One row per strategy. Every frame
     the comparison caches is released before it returns.
     """
-    pinned: list[DataFrame] = []
+    from pyspark.ml.functions import array_to_vector
+
+    pinned: list[DataFrame] = []  # every frame cached below
     try:
-        rows = _strategy_rows(spark, sf_dir, seed, pinned)
+        events = _pipeline_events(spark, sf_dir)
+        # cache the per-user table (tiny): the standardization stats agg and
+        # the base projection below are two consumers — uncached, each re-runs
+        # the whole window+agg chain over the fact table
+        table = user_feature_table(events).cache()
+        pinned.append(table)
+        feat_cols = [c for c in numeric_columns(table, exclude=("user_id", "label"))]
+        # standardize: mixed feature scales (tenure in days vs event counts)
+        # would dominate both the L1 penalty and the kNN euclidean metric;
+        # one tiny agg, broadcast back — no per-row collect
+        stats = table.agg(
+            *[F.avg(c).alias(f"__mu_{c}") for c in feat_cols],
+            *[F.coalesce(F.stddev(c), F.lit(1.0)).alias(f"__sd_{c}") for c in feat_cols],
+        )
+        std = table.crossJoin(F.broadcast(stats))
+        zcols = [
+            (
+                (F.col(c) - F.col(f"__mu_{c}"))
+                / F.when(F.col(f"__sd_{c}") > 0, F.col(f"__sd_{c}")).otherwise(F.lit(1.0))
+            ).alias(c)
+            for c in feat_cols
+        ]
+        base = std.select(
+            "user_id",
+            F.array(*zcols).alias("arr"),
+            F.col("label").cast("int").alias("y"),
+        )
+        # cache the STANDARDIZED PER-USER frame, not just the train side: the
+        # feature chain (label windows + pivot + joins) otherwise re-runs for
+        # the stats branch, the train branch, AND the test branch — three full
+        # passes. Per-user rows are orders of magnitude fewer than events, so
+        # this is the cheap thing to pin. Materialize BEFORE the strategy
+        # pool: five threads racing a cold cache each recompute the chain
+        # (cache blocks populate per-partition without coordination).
+        base = base.cache()
+        pinned.append(base)
+        base.count()
+        table.unpersist()  # everything downstream reads base's cache
+        # hash-stratified: GUARANTEES the held-out side keeps both classes at
+        # any scale — a Bernoulli split of a small user table can hand test a
+        # single class and leave every strategy's AUC undefined (sf0.001)
+        train, test = SA.stratified_hash_split(base, "y", "user_id", 0.2)
+        train = train.cache()
+        pinned.append(train)
+        train.count()
+        # every strategy scores this same frame (three actions each) — without
+        # the cache the whole feature chain (windows + pivot + joins) re-runs
+        # per metric collect. Partition count is SIZE-DERIVED (not a bench-box
+        # constant): each LBFGS iteration is one job over the frame, so target
+        # enough rows per task that scheduling overhead amortizes, never fewer
+        # partitions than the data needs.
+        test_v = (
+            test.withColumn("features", array_to_vector("arr"))
+            .withColumn("y", F.col("y").cast("double"))
+            .cache()
+        )
+        pinned.append(test_v)  # the cached frame: the coalesced one is a new plan
+        test_v = test_v.coalesce(_fit_partitions(test_v.count()))
+
+        # threshold/bucket_length omitted -> smote/nearmiss auto-tune them from
+        # the sampled kNN-distance quantile of THIS frame (no hand constants)
+        knn_kwargs = dict(num_hash_tables=5)
+
+        strategies = [
+            ("base", lambda: train),
+            ("undersample", lambda: SA.balance_undersample(train, "y", seed=seed)),
+            ("oversample", lambda: SA.oversample_with_replacement(train, "y", seed=seed)),
+            # target_ratio=1.0: imblearn's 1:1 default (py:772), like the other
+            # resamplers — k alone yields at most k rows per minority row
+            ("smote", lambda: SA.smote(
+                train, "user_id", "arr", "y", minority_value=1, k=2, seed=seed,
+                target_ratio=1.0, **knn_kwargs
+            )),
+            ("nearmiss", lambda: SA.nearmiss(
+                train, "user_id", "arr", "y", minority_value=1, k=3, seed=seed, **knn_kwargs
+            )),
+        ]
+
+        def evaluate(item):
+            name, mk = item
+            made = mk()
+            trv = (
+                made.withColumn("features", array_to_vector("arr"))
+                .withColumn("y", F.col("y").cast("double"))
+                .cache()  # consumed by the fit AND the count — SMOTE/NearMiss
+                # kNN must not re-run per action
+            )
+            battery = None
+            try:
+                n = trv.count()
+                fit_df = trv.coalesce(_fit_partitions(n))
+                model = MO.train_lr_l1(fit_df, C=10.0, features="features", label="y", max_iter=25)
+                scored = MO.predict_proba(model, test_v)
+                # one fused pass: AUC + battery from the same per-score frame
+                # (scored is scanned once, not once per metric family)
+                battery = ME.auc_with_battery(scored, "p1", "y", 0.5)
+                m = battery.collect()[0]
+            finally:
+                # five strategies run concurrently: leaving each trv (and
+                # smote's / the battery's internal caches) pinned can evict the
+                # shared base/train/test_v blocks mid-run at larger sfs
+                trv.unpersist()
+                SA.release_aux_caches(made, battery)
+            return (name, n, m["roc_auc"], m["accuracy"], m["recall"],
+                    m["precision"], m["f1"])
+
+        # strategies are independent: submit from a driver thread pool
+        # (CrossValidator's parallelism scheme) so the scheduler overlaps
+        # their jobs instead of idling between sequential fits; ex.map keeps
+        # the canonical row order
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=len(strategies)) as ex:
+            rows = list(ex.map(evaluate, strategies))
     finally:
         for df in pinned:
             df.unpersist()
@@ -134,130 +241,6 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
         "strategy string, n_train long, auc double, accuracy double, "
         "recall double, precision double, f1 double",
     )
-
-
-def _strategy_rows(
-    spark: SparkSession, sf_dir: str, seed: int, pinned: list[DataFrame]
-) -> list[tuple]:
-    """:func:`strategy_comparison`'s rows; every frame it caches and does
-    not release itself is appended to ``pinned`` for the caller to
-    release."""
-    from pyspark.ml.functions import array_to_vector
-
-    events = _pipeline_events(spark, sf_dir)
-    # cache the per-user table (tiny): the standardization stats agg and
-    # the base projection below are two consumers — uncached, each re-runs
-    # the whole window+agg chain over the fact table
-    table = user_feature_table(events).cache()
-    pinned.append(table)
-    feat_cols = [c for c in numeric_columns(table, exclude=("user_id", "label"))]
-    # standardize: mixed feature scales (tenure in days vs event counts)
-    # would dominate both the L1 penalty and the kNN euclidean metric;
-    # one tiny agg, broadcast back — no per-row collect
-    stats = table.agg(
-        *[F.avg(c).alias(f"__mu_{c}") for c in feat_cols],
-        *[F.coalesce(F.stddev(c), F.lit(1.0)).alias(f"__sd_{c}") for c in feat_cols],
-    )
-    std = table.crossJoin(F.broadcast(stats))
-    zcols = [
-        (
-            (F.col(c) - F.col(f"__mu_{c}"))
-            / F.when(F.col(f"__sd_{c}") > 0, F.col(f"__sd_{c}")).otherwise(F.lit(1.0))
-        ).alias(c)
-        for c in feat_cols
-    ]
-    base = std.select(
-        "user_id",
-        F.array(*zcols).alias("arr"),
-        F.col("label").cast("int").alias("y"),
-    )
-    # cache the STANDARDIZED PER-USER frame, not just the train side: the
-    # feature chain (label windows + pivot + joins) otherwise re-runs for
-    # the stats branch, the train branch, AND the test branch — three full
-    # passes. Per-user rows are orders of magnitude fewer than events, so
-    # this is the cheap thing to pin. Materialize BEFORE the strategy
-    # pool: five threads racing a cold cache each recompute the chain
-    # (cache blocks populate per-partition without coordination).
-    base = base.cache()
-    pinned.append(base)
-    base.count()
-    table.unpersist()  # everything downstream reads base's cache
-    # hash-stratified: GUARANTEES the held-out side keeps both classes at
-    # any scale — a Bernoulli split of a small user table can hand test a
-    # single class and leave every strategy's AUC undefined (sf0.001)
-    train, test = SA.stratified_hash_split(base, "y", "user_id", 0.2)
-    train = train.cache()
-    pinned.append(train)
-    train.count()
-    # every strategy scores this same frame (three actions each) — without
-    # the cache the whole feature chain (windows + pivot + joins) re-runs
-    # per metric collect. Partition count is SIZE-DERIVED (not a bench-box
-    # constant): each LBFGS iteration is one job over the frame, so target
-    # enough rows per task that scheduling overhead amortizes, never fewer
-    # partitions than the data needs.
-    test_v = (
-        test.withColumn("features", array_to_vector("arr"))
-        .withColumn("y", F.col("y").cast("double"))
-        .cache()
-    )
-    pinned.append(test_v)  # the cached frame: the coalesced one is a new plan
-    test_v = test_v.coalesce(_fit_partitions(test_v.count()))
-
-    # threshold/bucket_length omitted -> smote/nearmiss auto-tune them from
-    # the sampled kNN-distance quantile of THIS frame (no hand constants)
-    knn_kwargs = dict(num_hash_tables=5)
-
-    strategies = [
-        ("base", lambda: train),
-        ("undersample", lambda: SA.balance_undersample(train, "y", seed=seed)),
-        ("oversample", lambda: SA.oversample_with_replacement(train, "y", seed=seed)),
-        # target_ratio=1.0: imblearn's 1:1 default (py:772), like the other
-        # resamplers — k alone yields at most k rows per minority row
-        ("smote", lambda: SA.smote(
-            train, "user_id", "arr", "y", minority_value=1, k=2, seed=seed,
-            target_ratio=1.0, **knn_kwargs
-        )),
-        ("nearmiss", lambda: SA.nearmiss(
-            train, "user_id", "arr", "y", minority_value=1, k=3, seed=seed, **knn_kwargs
-        )),
-    ]
-
-    def evaluate(item):
-        name, mk = item
-        made = mk()
-        trv = (
-            made.withColumn("features", array_to_vector("arr"))
-            .withColumn("y", F.col("y").cast("double"))
-            .cache()  # consumed by the fit AND the count — SMOTE/NearMiss
-            # kNN must not re-run per action
-        )
-        battery = None
-        try:
-            n = trv.count()
-            fit_df = trv.coalesce(_fit_partitions(n))
-            model = MO.train_lr_l1(fit_df, C=10.0, features="features", label="y", max_iter=25)
-            scored = MO.predict_proba(model, test_v)
-            # one fused pass: AUC + battery from the same per-score frame
-            # (scored is scanned once, not once per metric family)
-            battery = ME.auc_with_battery(scored, "p1", "y", 0.5)
-            m = battery.collect()[0]
-        finally:
-            # five strategies run concurrently: leaving each trv (and
-            # smote's / the battery's internal caches) pinned can evict the
-            # shared base/train/test_v blocks mid-run at larger sfs
-            trv.unpersist()
-            _release(made, battery)
-        return (name, n, m["roc_auc"], m["accuracy"], m["recall"],
-                m["precision"], m["f1"])
-
-    # strategies are independent: submit from a driver thread pool
-    # (CrossValidator's parallelism scheme) so the scheduler overlaps
-    # their jobs instead of idling between sequential fits; ex.map keeps
-    # the canonical row order
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(strategies)) as ex:
-        return list(ex.map(evaluate, strategies))
 
 
 def run_pipeline(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
@@ -301,7 +284,7 @@ def run_pipeline(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
         for df in (table, train_bal):
             if df is not None:
                 df.unpersist()
-        _release(battery)
+        SA.release_aux_caches(battery)
 
     return spark.createDataFrame(
         [

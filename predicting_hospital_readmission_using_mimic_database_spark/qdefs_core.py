@@ -817,8 +817,7 @@ def q_u6(spark, sf):
     )
     n_min, n_synth = mb["n"], sb["n"]
     out.unpersist()
-    for aux in getattr(made, "_aux_caches", ()):
-        aux.unpersist()
+    SA.release_aux_caches(made)
     return spark.createDataFrame(
         [(n_min, n_synth, int(viol))],
         "n_minority long, n_synthetic long, n_out_of_envelope long",

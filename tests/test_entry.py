@@ -165,6 +165,7 @@ def test_strategy_comparison_shape(spark, monkeypatch):
         assert aqe[name]["n_train"] == clone[name]["n_train"]
     for rows in (aqe, clone):
         for r in rows.values():
+            assert r["n_train"] > 0, r["strategy"]
             for k in ("auc", "accuracy", "recall", "precision", "f1"):
                 assert r[k] is not None and 0.0 <= r[k] <= 1.0, (r["strategy"], k)
 
