@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import adopt_frame, local_frame, loop_session
+
 #: classic end-of-word marker: merges never cross word boundaries and
 #: word-final units stay distinct from word-internal ones
 END_MARKER = "</w>"
@@ -383,18 +385,15 @@ def bpe_train(
             r["w"]: (int(r["n"]), tuple(r["syms"])) for r in vocab.collect()
         }
         merges = _local_merge_loop(local, n_merges, min_count)
-        out_vocab = df.sparkSession.createDataFrame(
+        out_vocab = local_frame(
+            df.sparkSession,
             [(w, n, list(s)) for w, (n, s) in sorted(local.items())],
             "w string, n long, syms array<string>",
         )
         return merges, out_vocab
     merges = []
     last_ckpt = 0
-    # Loop-scoped session tuning in a CLONED session — newSession()
-    # shares the SparkContext, block manager, and global temp views
-    # but owns its SQLConf, so the overrides below are invisible to
-    # the caller's session (no set/restore window for concurrent
-    # queries on a shared session to observe). Why the overrides:
+    # Loop-scoped session tuning in a CLONED session (session.loop_session):
     # every iteration is a FIXED-SHAPE micro-job — partial agg, one
     # shuffle, TakeOrdered — so (a) AQE's per-stage re-planning only
     # adds driver latency (there is nothing left to re-plan), and
@@ -402,32 +401,12 @@ def bpe_train(
     # partitioning beat the session default at both ends (1 reducer
     # for a small vocab; the input's parallelism for a 10M-word
     # vocab). Measured at sf0.1: ~2x per-iteration latency. The
-    # vocab frame crosses sessions via a global temp view (plan
-    # handoff, no data movement) and the result is handed back the
-    # same way, so callers only ever see their own session's frames.
-    import uuid
-
-    base_sess = df.sparkSession
-    # tune_session first: newSession() starts from builder-time confs
-    # only, so the engine's runtime confs (nanos-as-long parquet,
-    # python-source filter pushdown, data-source registration) would
-    # otherwise be lost under the clone (see session.loop_session)
-    from ..session import tune_session as _tune
-
-    sess = _tune(base_sess.newSession())
-    sess.conf.set(
-        "spark.sql.session.timeZone",
-        base_sess.conf.get("spark.sql.session.timeZone"),
-    )
-    sess.conf.set("spark.sql.adaptive.enabled", "false")
-    sess.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(max(1, vocab.rdd.getNumPartitions())),
-    )
-    handoff = f"bpe_vocab_{uuid.uuid4().hex}"
-    vocab.createOrReplaceGlobalTempView(handoff)
-    try:
-        vocab = sess.table(f"global_temp.{handoff}")
+    # caller's session conf is never written, and the result is
+    # handed back with adopt_frame, so callers only ever see their own
+    # session's frames.
+    with loop_session(
+        vocab, shuffle_partitions=vocab.rdd.getNumPartitions()
+    ) as (_sess, (vocab,)):
         stats["regime"] = "distributed"
         while len(merges) < n_merges:
             rows = (
@@ -459,17 +438,7 @@ def bpe_train(
             if len(merges) - last_ckpt >= checkpoint_every:
                 vocab = vocab.localCheckpoint(eager=True)
                 last_ckpt = len(merges)
-        # hand the final vocab back to the CALLER's session: truncate
-        # lineage in the clone, publish through the same view, and
-        # eagerly checkpoint base-side so the returned frame no longer
-        # references the view (safe to drop) or the cloned session
-        vocab = vocab.localCheckpoint(eager=True)
-        vocab.createOrReplaceGlobalTempView(handoff)
-        vocab = base_sess.table(
-            f"global_temp.{handoff}"
-        ).localCheckpoint(eager=True)
-    finally:
-        base_sess.catalog.dropGlobalTempView(handoff)
+        vocab = adopt_frame(df.sparkSession, vocab.localCheckpoint(eager=True))
     sizes = [s for s in stats["batch_sizes"] if s]
     stats["mean_batch"] = round(sum(sizes) / len(sizes), 2) if sizes else 0.0
     return merges, vocab

@@ -6,9 +6,9 @@ analyzer=clean_textmain)`` (py:312-315) and glues the resulting sparse
 matrix onto the feature table by row order (py:332). Spark-first shape:
 MLlib ``CountVectorizer`` emits the sparse vector as a COLUMN on the same
 row — no positional join exists anywhere in this engine. Assembly is
-``VectorAssembler`` (py:461-462's ``df[cols].values``), one-hot is either
-the MLlib encoder (vector output, for model input) or explicit 0/1 dummy
-columns (``pd.get_dummies`` parity, py:344 — SQL-checkable).
+``VectorAssembler`` (py:461-462's ``df[cols].values``), one-hot is
+explicit 0/1 dummy columns (``pd.get_dummies`` parity, py:344 —
+SQL-checkable).
 """
 
 from __future__ import annotations
@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import clean_text_tokens
+from ..session import local_frame
 
 
 def tokens_df(docs: DataFrame, text_col: str = "text", out: str = "tokens") -> DataFrame:
@@ -49,7 +50,8 @@ def fit_count_vectorizer(
 def vocabulary_df(spark, model) -> DataFrame:
     """T15 — ``get_feature_names`` parity (py:323): vocabulary as rows
     (term, index); index is the vector position."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(t, i) for i, t in enumerate(model.vocabulary)], "term string, idx int"
     )
 
@@ -105,20 +107,6 @@ def get_dummies(df: DataFrame, col: str, values: Sequence[str], prefix: str | No
             for v in values
         ],
     )
-
-
-def one_hot_encode(df: DataFrame, cols: Sequence[str], out_suffix: str = "_oh"):
-    """M2 (vector form) — StringIndexer + OneHotEncoder pipeline; returns
-    (pipeline_model, transformed)."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import OneHotEncoder, StringIndexer
-
-    stages = []
-    for c in cols:
-        stages.append(StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep"))
-        stages.append(OneHotEncoder(inputCol=f"{c}_idx", outputCol=f"{c}{out_suffix}"))
-    model = Pipeline(stages=stages).fit(df)
-    return model, model.transform(df)
 
 
 def tfidf(

@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # ---------------------------------------------------------------------------
 # M3/M4 — random forest + probability prediction
 # ---------------------------------------------------------------------------
@@ -97,7 +99,7 @@ def rf_numtrees_sweep(
 
     with ThreadPoolExecutor(max_workers=max(1, parallelism)) as ex:
         rows = list(ex.map(one, num_trees_grid))
-    return train.sparkSession.createDataFrame(rows, "num_trees int, auc double")
+    return local_frame(train.sparkSession, rows, "num_trees int, auc double")
 
 
 def train_lr_l1(
@@ -147,7 +149,7 @@ def grid_search_lr_cv(
     rows = [
         (float(c), float(a)) for c, a in zip(Cs, model.avgMetrics, strict=True)
     ]
-    res = train.sparkSession.createDataFrame(rows, "C double, accuracy double")
+    res = local_frame(train.sparkSession, rows, "C double, accuracy double")
     return model, res
 
 
@@ -236,14 +238,6 @@ def chi2_scores(df: DataFrame, cols: Sequence[str], label: str) -> DataFrame:
     )
 
 
-def chi2_mllib(df: DataFrame, features: str, label: str) -> DataFrame:
-    """M9 (MLlib form) — ``pyspark.ml.stat.ChiSquareTest`` for parity
-    checks against :func:`chi2_scores` on indexed categorical vectors."""
-    from pyspark.ml.stat import ChiSquareTest
-
-    return ChiSquareTest.test(df, features, label, flatten=True)
-
-
 def top_n_by_score(scores: DataFrame, n: int, score_col: str = "mi") -> list[str]:
     """M10 helper — top-n feature names by score (deterministic tiebreak on
     name). Feature count is human-scale: the only intentional collect."""
@@ -277,4 +271,4 @@ def top_n_retrain(
         te = assemble_features(test.select(*cols, label), cols)
         m = train_rf(tr, "features", label, num_trees=num_trees, seed=seed)
         rows.append((int(n), float(ev.evaluate(m.transform(te)))))
-    return df.sparkSession.createDataFrame(rows, "n_features int, auc double")
+    return local_frame(df.sparkSession, rows, "n_features int, auc double")

@@ -44,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
+
 #: manifest schema for binary assets (the parquet layout a real ingest
 #: writes: content + typed metadata; blobs NEVER go through string columns)
 BLOB_SCHEMA = StructType(
@@ -548,7 +550,7 @@ def synthetic_blobs(spark, n: int = 64, partitions: int = 4) -> DataFrame:
         rows.append(
             (i, media, content, 64 + i % 512, 64 + (i * 3) % 512, 1000 * (1 + i % 30))
         )
-    return spark.createDataFrame(rows, BLOB_SCHEMA).repartition(partitions)
+    return local_frame(spark, rows, BLOB_SCHEMA).repartition(partitions)
 
 
 def _video_asset_shape(i: int) -> tuple[int, int, list]:

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def shuffle_rows(df: DataFrame, seed: int = 42) -> DataFrame:
     """U2 (engine primitive) — redistribute rows pseudo-randomly WITHOUT a
@@ -63,17 +65,6 @@ def stratified_split(
     for t in tests[1:]:
         test = test.unionByName(t)
     return train, test
-
-
-def undersample_exact(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
-    """U4 — exact-n uniform sample (py:447 ``sample(n=...)``):
-    rand-ordered top-n, compiled to TakeOrderedAndProject (per-partition
-    top-n, then merge of n-row heaps — no global sort of the input, but
-    the final merge materializes all n rows on ONE task). Use for
-    human-scale n; for n that is itself big data (billions of minority
-    rows at 100 TB) use :func:`undersample_fraction` — approximate n,
-    fully map-side."""
-    return df.orderBy(F.rand(seed)).limit(n)
 
 
 def undersample_fraction(
@@ -546,12 +537,12 @@ def _hash_prefilter(
     }
     if not big:
         return df
-    spark = df.sparkSession
     from pyspark.sql.types import LongType, StructField, StructType
 
     g_type = df.select(F.col(group_col).alias("__g")).schema[0].dataType
-    tdf = spark.createDataFrame(
-        [(g, t) for g, t in big.items()],
+    tdf = local_frame(
+        df.sparkSession,
+        list(big.items()),
         StructType([StructField("__g", g_type), StructField("__t", LongType())]),
     )
     h32 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
@@ -635,15 +626,15 @@ def mixture_sample(
     (:func:`_hash_prefilter` — identical kept set, bounded task input);
     pass ``prefilter_above=None`` to skip its count pass.
     """
-    spark = df.sparkSession
     quotas = {g: int(round(w * total)) for g, w in weights.items()}
     from pyspark.sql.types import LongType, StructField, StructType
 
     # quota frame typed from df's actual group column (int source ids,
     # dates, ... join correctly instead of assuming string)
     g_type = df.select(F.col(group_col)).schema[0].dataType
-    quota = spark.createDataFrame(
-        [(g, q) for g, q in quotas.items()],
+    quota = local_frame(
+        df.sparkSession,
+        list(quotas.items()),
         StructType(
             [StructField(group_col, g_type), StructField("__quota", LongType())]
         ),
@@ -687,52 +678,45 @@ def stratified_hash_split(
       ``test_frac * n_c`` (tight at that scale), and class presence on
       both sides is a near-certainty rather than a construction.
 
-    One tiny class-count collect; classes with a single row stay in
-    train.
+    One tiny class-count collect, whose per-class quotas enter the plan
+    as CASE literals; classes with a single row stay in train.
     """
     lab = F.col(label) if isinstance(label, str) else label
     counts = df.groupBy(lab.alias("__lab")).agg(F.count("*").alias("n")).collect()
-    quota = {
-        r["__lab"]: (
-            0 if r["n"] < 2 else min(r["n"] - 1, max(1, int(round(test_frac * r["n"]))))
-        )
-        for r in counts
-    }
-    big = {r["__lab"] for r in counts if r["n"] >= exact_below}
-    from pyspark.sql.types import BooleanType, LongType, StructField, StructType
-
-    spark = df.sparkSession
     lab_type = df.select(lab.alias("__lab")).schema[0].dataType
-    qdf = spark.createDataFrame(
-        [(k, v, k in big) for k, v in quota.items()],
-        StructType(
-            [
-                StructField("__lab", lab_type),
-                StructField("__tq", LongType()),
-                StructField("__big", BooleanType()),
-            ]
-        ),
-    )
+
+    def is_class(k):
+        return lab.eqNullSafe(F.lit(k).cast(lab_type))
+
+    # the collected counts ride in the plan as CASE literals: no quota
+    # frame, no join
+    tq = F.lit(0)
+    for r in counts:
+        n = r["n"]
+        q = 0 if n < 2 else min(n - 1, max(1, int(round(test_frac * n))))
+        tq = F.when(is_class(r["__lab"]), q).otherwise(tq)
+    big = [r["__lab"] for r in counts if r["n"] >= exact_below]
     h = F.md5(F.concat(F.col(key_col).cast("string"), F.lit(salt)))
-    joined = df.join(F.broadcast(qdf), lab.eqNullSafe(F.col("__lab")))
+    w = Window.partitionBy(lab).orderBy(h)
+    if not big:
+        ranked = df.withColumn("__sr", F.row_number().over(w))
+        test = ranked.filter(F.col("__sr") <= tq).drop("__sr")
+        train = ranked.filter(F.col("__sr") > tq).drop("__sr")
+        return train, test
+    # rank ONLY the bounded classes; big classes never enter the window
+    in_big = F.lit(False)
+    for k in big:
+        in_big = in_big | is_class(k)
     thresh = int(test_frac * float(1 << 32))
     big_test = F.conv(F.substring(h, 1, 8), 16, 10).cast("long") < F.lit(thresh)
-    if big:
-        # rank ONLY the bounded classes; big classes never enter the window
-        w = Window.partitionBy(lab).orderBy(h)
-        small_part = joined.filter(~F.col("__big"))
-        ranked = small_part.withColumn("__sr", F.row_number().over(w))
-        small_test = ranked.filter(F.col("__sr") <= F.col("__tq"))
-        small_train = ranked.filter(F.col("__sr") > F.col("__tq"))
-        big_part = joined.filter(F.col("__big"))
-        test = small_test.drop("__sr").unionByName(big_part.filter(big_test))
-        train = small_train.drop("__sr").unionByName(big_part.filter(~big_test))
-        drop = ("__lab", "__tq", "__big")
-        return train.drop(*drop), test.drop(*drop)
-    w = Window.partitionBy(lab).orderBy(h)
-    ranked = joined.withColumn("__sr", F.row_number().over(w))
-    test = ranked.filter(F.col("__sr") <= F.col("__tq")).drop("__sr", "__lab", "__tq", "__big")
-    train = ranked.filter(F.col("__sr") > F.col("__tq")).drop("__sr", "__lab", "__tq", "__big")
+    ranked = df.filter(~in_big).withColumn("__sr", F.row_number().over(w))
+    big_part = df.filter(in_big)
+    test = ranked.filter(F.col("__sr") <= tq).drop("__sr").unionByName(
+        big_part.filter(big_test)
+    )
+    train = ranked.filter(F.col("__sr") > tq).drop("__sr").unionByName(
+        big_part.filter(~big_test)
+    )
     return train, test
 
 

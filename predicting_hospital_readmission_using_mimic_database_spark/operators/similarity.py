@@ -22,6 +22,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Elementwise product + sum, all JVM-side."""
@@ -354,45 +356,6 @@ def topk_bruteforce(
     return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
 
 
-def topk_bruteforce_many(
-    df: DataFrame,
-    id_col: str,
-    array_col: str,
-    probes: DataFrame,
-    probe_id: str,
-    probe_array: str,
-    k: int = 10,
-) -> DataFrame:
-    """Exact cosine top-k per probe row: broadcast the probe set, score
-    every (probe, item) pair, keep k per probe via a per-probe window
-    (partitioned by probe — parallel across probes)."""
-    from pyspark.sql import Window
-
-    scored = df.crossJoin(
-        F.broadcast(
-            probes.select(
-                F.col(probe_id).alias("__pid"), F.col(probe_array).alias("__pv")
-            )
-        )
-    ).select(
-        "__pid",
-        F.col(id_col),
-        F.round(
-            cosine(
-                F.col(array_col).cast("array<double>"),
-                F.col("__pv").cast("array<double>"),
-            ),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("__pid").orderBy(F.desc("cosine"), F.col(id_col))
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select(F.col("__pid").alias(probe_id), id_col, "cosine", F.col("__rn").alias("rank"))
-    )
-
-
 def cell_radii(assigned: DataFrame, centers, array_col: str = "__arr") -> list[float]:
     """Per-cell angular radius of an IVF assignment: the max angle between
     a cell's (unit) members and its unit-normalized centroid — ONE
@@ -409,7 +372,8 @@ def cell_radii(assigned: DataFrame, centers, array_col: str = "__arr") -> list[f
     spark = assigned.sparkSession
     cn = [np.asarray(c, dtype=float) for c in centers]
     cn = [c / (np.linalg.norm(c) or 1.0) for c in cn]
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cn)],
         "__cell int, __cent array<double>",
     )
@@ -593,7 +557,7 @@ def topk_ivf(
         # tiny k-row result: rebuild from the collected rows rather than
         # leaving the caller a plan over the (about to be unpersisted)
         # assignment
-        return df.sparkSession.createDataFrame(rows, first.schema)
+        return local_frame(df.sparkSession, rows, first.schema)
     finally:
         assigned.unpersist()
 
@@ -808,7 +772,7 @@ def rerank_candidates(
     ])
     if not seeds:
         # an empty first stage reranks to an empty result, not a crash
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     missing = sorted(
         {r["query_id"] for r in
          candidates.select("query_id").distinct().collect()}
@@ -824,7 +788,8 @@ def rerank_candidates(
     cand = F.broadcast(
         candidates.select("query_id", F.col("cand_id").cast("long"))
     )
-    seed_df = F.broadcast(spark.createDataFrame(
+    seed_df = F.broadcast(local_frame(
+        spark,
         sorted((q, int(d)) for q, d in seeds.items()),
         "query_id string, __seed_id long",
     ))
@@ -869,7 +834,7 @@ def rerank_candidates(
     )
     rows = ranked.collect()
     scored.unpersist()
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)
 
 
 def train_pq_codebooks(
@@ -1129,7 +1094,7 @@ def topk_ivf_pq(
             # reclaims it with the plan) — the bm25_topk convention
             return ranked
         rows_out = ranked.collect()
-        return df.sparkSession.createDataFrame(rows_out, ranked.schema)
+        return local_frame(df.sparkSession, rows_out, ranked.schema)
     except BaseException:
         if encoded is not None and not materialize:
             # raised before the lazy plan was handed over: nothing

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.text import tokenize
+from ..session import local_frame
 
 # marker stopwords per language — tiny n-gram-ish heuristic lists; the
 # language whose markers appear most wins (deterministic tiebreak by the
@@ -499,7 +500,8 @@ def bm25_topk(
         # downstream) or empty query map (reduce() over zero per-query
         # branches): return the typed empty result instead
         # (mirrors rerank_candidates' empty-seeds posture)
-        empty = spark.createDataFrame(
+        empty = local_frame(
+            spark,
             [],
             T.StructType([
                 T.StructField("query_id", T.StringType(), True),
@@ -513,7 +515,8 @@ def bm25_topk(
             ]),
         )
         return empty
-    qdf = F.broadcast(spark.createDataFrame(
+    qdf = F.broadcast(local_frame(
+        spark,
         sorted(
             (qid, t) for qid, terms in queries.items() for t in set(terms)
         ),
@@ -572,4 +575,4 @@ def bm25_topk(
     # executor memory until plan GC
     rows = ranked.collect()
     scored.unpersist()
-    return spark.createDataFrame(rows, ranked.schema)
+    return local_frame(spark, rows, ranked.schema)

@@ -37,7 +37,7 @@ from ..ml import metrics as ME
 from ..ml import models as MO
 from ..ml.features import assemble_features, numeric_columns
 from ..operators import sampling as SA
-from ..session import small_plan_spark
+from ..session import local_frame, small_plan_spark
 from ..sources.io import read_table
 from .readmission import readmit_labels
 
@@ -236,7 +236,8 @@ def strategy_comparison(spark: SparkSession, sf_dir: str, seed: int = 42) -> Dat
     finally:
         for df in pinned:
             df.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "strategy string, n_train long, auc double, accuracy double, "
         "recall double, precision double, f1 double",
@@ -286,7 +287,8 @@ def run_pipeline(spark: SparkSession, sf_dir: str, seed: int = 42) -> DataFrame:
                 df.unpersist()
         SA.release_aux_caches(battery)
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 n_users,

@@ -284,6 +284,76 @@ def small_plan_spark(
     )
 
 
+# ----------------------------------------------------------------------
+# driver-held rows as a JVM local relation
+# ----------------------------------------------------------------------
+def _arrow_value(dt):
+    """Converter from a Python value of Spark type ``dt`` to the form
+    pyarrow builds ``dt``'s Arrow type from, or None when the value
+    already is that form. Structs become dicts (tuples and Rows are
+    positional, as in ``createDataFrame``), and a naive ``datetime`` for
+    a TIMESTAMP column is read as local time, as
+    ``createDataFrame(list)`` reads it."""
+    from pyspark.sql import types as T
+
+    if isinstance(dt, T.StructType):
+        subs = [(f.name, _arrow_value(f.dataType)) for f in dt.fields]
+
+        def struct(v):
+            if v is None:
+                return None
+            vals = [v.get(n) for n, _ in subs] if isinstance(v, dict) else v
+            return {n: c(x) if c else x for (n, c), x in zip(subs, vals)}
+
+        return struct
+    if isinstance(dt, T.MapType):
+        kc, vc = _arrow_value(dt.keyType), _arrow_value(dt.valueType)
+        if kc is None and vc is None:
+            return None
+        return lambda v: None if v is None else [
+            (kc(k) if kc else k, vc(x) if vc else x) for k, x in v.items()
+        ]
+    if isinstance(dt, T.ArrayType):
+        ec = _arrow_value(dt.elementType)
+        return None if ec is None else (
+            lambda v: None if v is None else [ec(x) for x in v]
+        )
+    if isinstance(dt, T.TimestampType):
+        return lambda v: v if v is None or v.tzinfo else v.astimezone()
+    return None
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """The one way the engine turns driver-held rows (strategy
+    summaries, split quotas, file lists, metadata tables) into a frame:
+    through an Arrow table, so the plan is a JVM ``LocalRelation``.
+    ``spark.createDataFrame(<list>)`` instead pickles the rows into a
+    Python RDD, and every action over it runs a Python-worker task per
+    slice. ``schema`` is a ``StructType`` or a DDL string; ``rows`` are
+    tuples or Rows (positional) or dicts (by name); ``[]`` gives an
+    empty frame with exactly ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    names = schema.names
+    cols = [[] for _ in names]
+    for r in rows:
+        vals = [r.get(n) for n in names] if isinstance(r, dict) else r
+        for col, v in zip(cols, vals):
+            col.append(v)
+    arrays = []
+    for f, af, col in zip(schema.fields, arrow, cols):
+        conv = _arrow_value(f.dataType)
+        arrays.append(
+            pa.array([conv(v) for v in col] if conv else col, type=af.type)
+        )
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+
+
 def adopt_frame(base: SparkSession, df):
     """Hand a loop result back to the CALLER's session: publish the
     clone-side frame through a throwaway global temp view and eagerly

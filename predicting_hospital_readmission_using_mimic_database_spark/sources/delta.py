@@ -65,6 +65,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
+
 DELTA_LOG_DIR = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
 #: classic checkpoints: n.checkpoint.parquet or n.checkpoint.<part>.<of>.parquet
@@ -1828,7 +1830,7 @@ def _export_change_data(table, root: str, version: int, adds, removes):
         # zero-row rewrite (pure compaction): an EMPTY change file must
         # still exist — a cdc-carrying commit means "these ARE the
         # changes", which here is none, instead of derived pairs
-        spark.createDataFrame([], cdf.schema).coalesce(1).write.mode(
+        local_frame(spark, [], cdf.schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(stage)
         parts = sorted(_glob.glob(os.path.join(stage, "part-*.parquet")))
@@ -2053,7 +2055,7 @@ def read_delta(
                 list(schema.fields)
                 + [_SF(n, _LT(), True) for n, _t in lineage_fields]
             )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     def _logical(out, extras=()):
         """Physical scan frame -> declared logical schema: one
@@ -2113,7 +2115,8 @@ def read_delta(
     rt_extras = ()
     if row_tracking:
         base_c, ver_c = key + "_rtbase", key + "_rtver"
-        rt_df = spark.createDataFrame(
+        rt_df = local_frame(
+            spark,
             [
                 (
                     os.path.abspath(os.path.join(root, rel)),
@@ -2171,7 +2174,7 @@ def read_delta(
         )
         for rel, pv in live.items()
     ]
-    pv_df = spark.createDataFrame(pv_rows, pv_schema)
+    pv_df = local_frame(spark, pv_rows, pv_schema)
     out = df.join(F.broadcast(pv_df), key, "left")
     return _logical(out, rt_extras)
 
@@ -2259,7 +2262,8 @@ def _dv_positions_df(
         (os.path.abspath(os.path.join(root, rel)), json.dumps(desc))
         for rel, desc in sorted(dv_live.items())
     ]
-    spec = spark.createDataFrame(
+    spec = local_frame(
+        spark,
         rows, "__dv_key string, __dv_desc string"
     ).repartition(len(rows), "__dv_key")
     out_schema = StructType(
@@ -2460,7 +2464,7 @@ def read_delta_changes(
                         )
                 manifest.append((rel, v, ct, pv or {}))
     if not manifest:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     for rel, v, _ct, _pv in manifest:
         if not os.path.exists(os.path.join(root, rel)):
             raise FileNotFoundError(
@@ -2525,7 +2529,7 @@ def read_delta_changes(
         )
         for rel, v, ct, pv in manifest
     ]
-    man_df = spark.createDataFrame(man_rows, man_schema)
+    man_df = local_frame(spark, man_rows, man_schema)
     joined = df.join(F.broadcast(man_df), key)
     out_cols = [
         (

@@ -452,19 +452,6 @@ def _file_stats(path: str) -> str:
     })
 
 
-def _last_txn_version(log_dir: str, app_id: str) -> int | None:
-    """The newest ``txn`` action version recorded for ``app_id`` — the
-    spec's ``setTransaction`` streaming-sink dedup: a replayed
-    micro-batch whose (appId, version) is already recorded must SKIP,
-    or a sink retry after a commit-then-crash would double-append.
-    Resolved through the full log REPLAY (checkpoint + commits):
-    checkpoints carry txn actions per spec, so log truncation never
-    collapses the dedup window."""
-    txns: dict[str, int] = {}
-    _replay_log(os.path.dirname(log_dir), txns_out=txns)
-    return txns.get(app_id)
-
-
 def append_delta(
     spark: SparkSession, root: str, df: DataFrame,
     operation: str = "WRITE", txn: tuple[str, int] | None = None,

@@ -58,7 +58,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import small_plan_session, small_plan_spark
+from ..session import local_frame, small_plan_session, small_plan_spark
 
 
 def _live_bytes_est(root: str, live: dict) -> int:
@@ -250,7 +250,7 @@ def _scan_with_positions(
             )
             for rel, pv in live.items()
         ]
-        pv_df = spark.createDataFrame(pv_rows, pv_schema)
+        pv_df = local_frame(spark, pv_rows, pv_schema)
         df = df.join(F.broadcast(pv_df), key, "left")
     return df.select(
         *[

@@ -66,6 +66,7 @@ from .delta import (
 )
 from .io import decoded_file_path, zorder_value
 from .table import _harvest_stats
+from ..session import local_frame
 
 #: column types OPTIMIZE ZORDER can quantize (castable to double with
 #: order preserved); strings/binary are refused — their parquet footer
@@ -364,7 +365,8 @@ def optimize_delta(
                 dels = _dv_positions_df(spark, root, group_dvs, key_c, pos_c)
                 df = df.join(F.broadcast(dels), [key_c, pos_c], "left_anti")
             if row_tracking:
-                rt_df = spark.createDataFrame(
+                rt_df = local_frame(
+                    spark,
                     [
                         (
                             os.path.abspath(os.path.join(root, rel)),

@@ -57,6 +57,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 HOODIE_DIR = ".hoodie"
 META_COLS = (
     "_hoodie_commit_time",
@@ -474,7 +476,7 @@ def read_hudi_incremental(
         p for instant, p in groups.values() if instant > str(begin)
     )
     if not touched:
-        out = spark.createDataFrame([], schema)
+        out = local_frame(spark, [], schema)
     else:
         out = spark.read.schema(schema).parquet(*touched).filter(
             F.col("_hoodie_commit_time") > str(begin)
@@ -1887,7 +1889,7 @@ def _read_mor(
                 pq.ParquetFile(newest_file).schema_arrow,
                 prefer_timestamp_ntz=True,
             )
-            out = spark.createDataFrame([], schema)
+            out = local_frame(spark, [], schema)
             if not keep_meta:
                 out = out.drop(*[c for c in META_COLS if c in out.columns])
             return out
@@ -2071,7 +2073,8 @@ def _read_mor(
             )
             for i, (p, idxs) in enumerate(valid)
         ]
-        fdf = spark.createDataFrame(
+        fdf = local_frame(
+            spark,
             file_rows, "fidx long, path string, part string, blocks string"
         ).repartition(len(file_rows), "fidx")
 
@@ -2167,7 +2170,7 @@ def _read_mor(
             if precombine is not None:
                 base = base.withColumn("__ord", F.col(precombine))
         else:
-            base = spark.createDataFrame([], log_schema)
+            base = local_frame(spark, [], log_schema)
         keyc = ["_hoodie_record_key"]
         if has_ppath:
             keyc.append("_hoodie_partition_path")
@@ -2197,7 +2200,7 @@ def _read_mor(
         plain = spark.read.schema(schema).parquet(*plain_bases)
         out = plain if out is None else out.unionByName(plain)
     if out is None:
-        out = spark.createDataFrame([], schema)
+        out = local_frame(spark, [], schema)
     if not keep_meta:
         out = out.drop(*[c for c in META_COLS if c in out.columns])
     return out
@@ -2290,7 +2293,7 @@ def read_hudi(
             root, record_keys, groups, lambda v: _part_and_name(root, v[1])
         )
     if not groups:
-        out = spark.createDataFrame([], schema)
+        out = local_frame(spark, [], schema)
         if not keep_meta:
             out = out.drop(*[c for c in META_COLS if c in out.columns])
         return out

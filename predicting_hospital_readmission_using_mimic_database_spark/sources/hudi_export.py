@@ -49,7 +49,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from ..session import small_plan_session, small_plan_spark
+from ..session import local_frame, small_plan_session, small_plan_spark
 from .hudi import HOODIE_DIR
 
 
@@ -529,7 +529,7 @@ def export_hudi(
             }
         )
         ndf = F.broadcast(
-            spark.createDataFrame(name_to_fid, "__fn string, __fid string")
+            local_frame(spark, name_to_fid, "__fn string, __fid string")
         )
         read_schema = StructType(
             [
@@ -977,7 +977,7 @@ def _export_mor_delta(
         # every prior export — a partitioned layout writes no file for
         # a bucket with zero rows in a partition): the old state is
         # simply empty, every new row is an insert
-        old = spark.createDataFrame([], old_schema)
+        old = local_frame(spark, [], old_schema)
     new = cur.filter(F.col("__b").isin([int(b) for b in buckets])).withColumn(
         "__k", key_expr
     )
@@ -1070,7 +1070,8 @@ def _export_mor_delta(
                 dest, part, fid, inst, tok, prev_slices, prev_logs,
                 pending,
             )
-        lp_df = spark.createDataFrame(
+        lp_df = local_frame(
+            spark,
             [(pp, bk, lp) for (pp, bk), lp in logpath.items()],
             "__pp string, __bk int, __lp string",
         )
@@ -1356,7 +1357,7 @@ def compact_hudi(spark, dest: str) -> str | None:
             for n in names:
                 fmap.append((pp, n, fid))
     fdf = F.broadcast(
-        spark.createDataFrame(fmap, "__pp string, __fn string, __fid string")
+        local_frame(spark, fmap, "__pp string, __fn string, __fid string")
     )
     joined = rows.join(
         fdf,
@@ -2570,7 +2571,8 @@ def _commit_log_dml(
             dest, part, fid, inst, tok, prev_slices, prev_logs,
             pending,
         )
-    lp_df = spark.createDataFrame(
+    lp_df = local_frame(
+        spark,
         [(pp, fid, lp) for (pp, fid), lp in logpath.items()],
         "__pp string, __fid string, __lp string",
     )

@@ -74,6 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .avro_ocf import read_avro
+from ..session import local_frame
 
 
 class IcebergProtocolError(NotImplementedError):
@@ -1081,7 +1082,7 @@ def iceberg_meta_table(
             )
             for s in snaps
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     if kind == "history":
         cur = meta.get("current-snapshot-id")
         schema = ST(
@@ -1096,7 +1097,7 @@ def iceberg_meta_table(
              s["snapshot-id"] == cur)
             for s in snaps
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     if kind == "refs":
         schema = ST(
             [
@@ -1109,7 +1110,7 @@ def iceberg_meta_table(
             (name, r.get("type"), r.get("snapshot-id"))
             for name, r in sorted((meta.get("refs") or {}).items())
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     if kind == "statistics":
         # the spec's table-statistics list: Puffin files of per-snapshot
         # blob metadata (NDV theta sketches etc.) — surfaced as-is; blob
@@ -1136,7 +1137,7 @@ def iceberg_meta_table(
             )
             for st in (meta.get("statistics") or [])
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     if kind not in ("manifests", "files", "delete_files", "partitions"):
         raise ValueError(
             f"unknown metadata table {kind!r} (have snapshots, history, "
@@ -1181,7 +1182,7 @@ def iceberg_meta_table(
             )
             for m in manifests
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, schema)
     want_delete = kind == "delete_files"
     schema = ST(
         [
@@ -1227,7 +1228,8 @@ def iceberg_meta_table(
                 StructField("total_size_in_bytes", LongType(), False),
             ]
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(dict(pv), n, rc, sz) for pv, (n, rc, sz) in sorted(part_agg.items())],
             pschema,
         )
@@ -1261,7 +1263,7 @@ def iceberg_meta_table(
                     None if eq is None else [int(i) for i in eq],
                 )
             )
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def _live_files(
@@ -1497,7 +1499,7 @@ def _dv_deletes_df(
                     out[src] = [int(r.srcid)] * len(vals)
                 yield pd.DataFrame(out)
 
-    sdf = spark.createDataFrame(rows, spec_schema)
+    sdf = local_frame(spark, rows, spec_schema)
     return sdf.repartition(max(1, len(rows))).mapInPandas(decode, out_schema)
 
 
@@ -2508,7 +2510,7 @@ def read_iceberg(
                     T.StructField(_keep_keys[1], T.LongType(), True),
                 ]
             )
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     from pyspark.sql import functions as F
 
     from .io import decoded_file_path as _norm
@@ -2659,7 +2661,8 @@ def read_iceberg(
         # (decoded %XX, '+' preserved, absolute): per data file its
         # sequence number plus one applicability flag per delete file
         adm_cols = [f"{seqc}_adm{i}" for i in range(len(dels_sorted))]
-        seq_df = spark.createDataFrame(
+        seq_df = local_frame(
+            spark,
             [
                 tuple(
                     [os.path.abspath(unquote(_localize(rec[0], root))), int(rec[2])]
@@ -2708,7 +2711,8 @@ def read_iceberg(
         from pyspark.sql.types import LongType, StringType, StructField
 
         frid_c, lseq_c = fp + "_frid", fp + "_lseq"
-        lin_df = spark.createDataFrame(
+        lin_df = local_frame(
+            spark,
             [
                 (
                     os.path.abspath(unquote(_localize(rec[0], root))),
@@ -2923,12 +2927,13 @@ def read_iceberg_changelog(
                 stamps.append((p, "delete", ordn, sid))
                 recs.setdefault(p, prev_files[p])
         if not stamps:
-            return spark.createDataFrame([], out_schema)
+            return local_frame(spark, [], out_schema)
         key_exprs = [
             decoded_file_path(F.col("_metadata.file_path")).alias(fp)
         ]
         scan = _scan_over(recs, key_exprs)
-        stamp_df = spark.createDataFrame(
+        stamp_df = local_frame(
+            spark,
             [(_norm_path(p), ct, o, s_) for p, ct, o, s_ in stamps],
             T.StructType(
                 [
@@ -2943,7 +2948,7 @@ def read_iceberg_changelog(
 
     # ------------------------------------------------------- replay
     if nb < 2:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     # catalog the window's strike sources (delete files are immutable,
     # so identity is by path/offset) and each boundary's live set
     src_spec: list[tuple] = []       # i -> ("p", path) | ("v", dv dict)
@@ -3041,7 +3046,7 @@ def read_iceberg_changelog(
         if any(e != ev[0] for e in ev):
             scan_set.add(p)
     if not scan_set:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     scan_recs = {p: recs[p] for p in scan_set}
 
     pos_c = fp + "_pos"
@@ -3054,7 +3059,8 @@ def read_iceberg_changelog(
     # broadcast per-file facts: live flags per boundary + equality
     # admissibility per delete file (ordering/scope folded here)
     live_c, adm_c = fp + "_live", fp + "_adm"
-    lfr = spark.createDataFrame(
+    lfr = local_frame(
+        spark,
         [
             (
                 _norm_path(p),
@@ -3193,7 +3199,7 @@ def read_iceberg_changelog(
             )
         )
     if not chgs:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     out_cols = [f.name for f in schema.fields]
     chg = fp + "_chg"
     return keyed.select(
@@ -3277,7 +3283,7 @@ def read_iceberg_changes(
         list(schema.fields) + [StructField("_snapshot_id", LongType(), True)]
     )
     if not file_sid:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     fp = "__iceberg_chg_file"
     while fp in schema.names:
         fp = "_" + fp
@@ -3309,7 +3315,8 @@ def read_iceberg_changes(
         scan = frames[0]
         for x in frames[1:]:
             scan = scan.unionByName(x)
-    map_df = spark.createDataFrame(
+    map_df = local_frame(
+        spark,
         # same normalization as the scan side's decoded_file_path (%XX
         # decoded, '+' preserved): a percent-escaped data-file path
         # would otherwise miss the INNER stamp join and silently drop

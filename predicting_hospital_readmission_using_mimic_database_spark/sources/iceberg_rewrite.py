@@ -80,6 +80,7 @@ from .iceberg import (
 )
 from .io import zorder_value
 from .table import _harvest_stats
+from ..session import local_frame
 
 
 def rewrite_iceberg_data_files(
@@ -221,7 +222,8 @@ def rewrite_iceberg_data_files(
         from .io import decoded_file_path
 
         fpc, posc = "__rw_file", "__rw_pos"
-        lin = spark.createDataFrame(
+        lin = local_frame(
+            spark,
             [
                 (
                     os.path.abspath(unquote(_localize(rec[0], root))),

@@ -57,6 +57,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
+
 LOG_DIR = "_log"
 LAST_CHECKPOINT = "_last_checkpoint"
 _BUCKET_COL = "__bucket"
@@ -796,7 +798,7 @@ class SnapshotTable:
 
     def _read_files(self, rel_paths: Sequence[str]) -> DataFrame:
         if not rel_paths:
-            return self.spark.createDataFrame([], self.schema)
+            return local_frame(self.spark, [], self.schema)
         abs_paths = [os.path.join(self.root, p) for p in rel_paths]
         for p in abs_paths:
             if not os.path.exists(p):
@@ -889,7 +891,7 @@ class SnapshotTable:
             parts.append(tag(after.exceptAll(before), "insert", v))
             parts.append(tag(before.exceptAll(after), "delete", v))
         if not parts:
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -249,9 +249,35 @@ def test_bpe_train_conf_scoped_to_cloned_session(spark):
     assert vocab.sparkSession is spark  # handed back to the caller
     leftovers = [
         t.name for t in spark.catalog.listTables("global_temp")
-        if t.name.startswith("bpe_vocab_")
+        if t.name.startswith(("bpe_vocab_", "loop_"))
     ]
     assert leftovers == []
+    vocab.unpersist()
+
+
+def test_bpe_loop_session_keeps_aqe_off_under_tune_session(spark, monkeypatch):
+    """The distributed trainer runs on ``session.loop_session``'s clone,
+    whose AQE-off override survives a ``tune_session`` (any
+    ``read_table`` re-tunes the session it reads on); the merges still
+    equal the local reference."""
+    from predicting_hospital_readmission_using_mimic_database_spark.ml import bpe
+    from predicting_hospital_readmission_using_mimic_database_spark.session import tune_session
+
+    seen = []
+    orig = bpe.pair_and_triple_counts
+
+    def spy(vocab):
+        sess = tune_session(vocab.sparkSession)
+        seen.append((sess is spark, sess.conf.get("spark.sql.adaptive.enabled")))
+        return orig(vocab)
+
+    monkeypatch.setattr(bpe, "pair_and_triple_counts", spy)
+    docs = ["low lower lowest low low", "new newer newest new newer"]
+    df = spark.createDataFrame(list(enumerate(docs)), "id long, text string")
+    merges, vocab = bpe.bpe_train(df, "text", n_merges=6, local_below=0)
+    assert seen and all(s == (False, "false") for s in seen), seen
+    assert merges == _local_bpe(" ".join(docs).split(), 6)[0]
+    assert vocab.sparkSession is spark
     vocab.unpersist()
 
 

@@ -324,6 +324,45 @@ def test_stratified_hash_split_big_class_map_only(spark):
     )
 
 
+def test_stratified_hash_split_matches_md5_rank_rule(spark):
+    """Both sides equal a pure-Python application of the rule: a class
+    under ``exact_below`` sends its ``clamp(round(frac * n), 1, n - 1)``
+    smallest md5(key || salt) digests to test; a class at or above it
+    sends every key whose first 8 hex digits fall under frac * 2^32. A
+    NULL label is a class of its own, and the split plan holds no join."""
+    import hashlib
+
+    frac, salt, cut = 0.25, "split", 60
+    labels = {None: 9, "a": 60, "b": 13, "c": 1}  # "a" is above the cutoff
+    rows, uid = [], 0
+    for lab, n in labels.items():
+        for _ in range(n):
+            rows.append((uid, lab))
+            uid += 1
+    df = spark.createDataFrame(rows, "user_id long, y string")
+    train, test = SA.stratified_hash_split(df, "y", "user_id", frac, salt, exact_below=cut)
+
+    def digest(k):
+        return hashlib.md5(f"{k}{salt}".encode()).hexdigest()
+
+    want_test = set()
+    for lab, n in labels.items():
+        keys = [u for u, y in rows if y == lab]
+        if n >= cut:
+            want_test |= {k for k in keys if int(digest(k)[:8], 16) < int(frac * 2**32)}
+        elif n >= 2:
+            q = min(n - 1, max(1, int(round(frac * n))))
+            want_test |= set(sorted(keys, key=digest)[:q])
+    got_test = [r["user_id"] for r in test.collect()]
+    got_train = [r["user_id"] for r in train.collect()]
+    assert sorted(got_test) == sorted(want_test)
+    assert sorted(got_train) == sorted(set(range(uid)) - want_test)
+    assert {r["y"] for r in test.collect()} >= {None, "a", "b"}
+    for side in (train, test):
+        plan = side._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan, plan
+
+
 def test_quota_prefilter_keeps_identical_set(spark):
     """The hash-threshold prefilter must not change the kept set —
     the n smallest hashes all survive any threshold admitting >= n."""

@@ -2,7 +2,8 @@
 """Dump plan-posture evidence for the headline queries into PLANS.md.
 
 For each query: the parquet ReadSchema lines (column pruning), pushed
-filters, exchange/broadcast counts, and single-partition-window detection
+filters, exchange/broadcast counts, pickled Python RDD scans, and
+single-partition-window detection
 — the structural facts behind the 100 TB claims. Run after operator
 changes; the committed PLANS.md is the reviewable artifact.
 """
@@ -103,6 +104,22 @@ def count_unpartitioned_windows(plan: str) -> tuple[int, int, int]:
             else:
                 unbounded += 1
     return unbounded, offsets, post_limit
+
+
+def count_python_rdd_scans(node) -> int:
+    """Count ``Scan ExistingRDD`` leaves fed by a pickled Python RDD
+    (``spark.createDataFrame(<list>)``): every action over such a frame
+    runs one Python-worker task per slice, a Python boundary that no
+    Arrow/pandas node name shows. A ``localCheckpoint`` frame prints the
+    same node name, so the scan's RDD lineage decides."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return count_python_rdd_scans(node.executedPlan())
+    if name == "Scan ExistingRDD":
+        return int("PythonRDD" in node.rdd().toDebugString())
+    kids = node.children()
+    return sum(count_python_rdd_scans(kids.apply(i)) for i in range(kids.size()))
+
 
 AUDIT = [
     "flagship_readmit_30d", "p5_filter_numeric", "j1_join_inner",
@@ -324,16 +341,18 @@ def main() -> None:
         "# PLANS — physical-plan audit of headline queries",
         "",
         f"Generated by `python tools/explain_audit.py` at {SF_DIR}. For each",
-        "query: scan schemas (pruning), pushed filters, exchange counts, and",
-        "whether any window runs unpartitioned (the single-task trap — none",
-        "should).",
+        "query: scan schemas (pruning), pushed filters, exchange counts, pickled",
+        "Python RDD scans (`Scan ExistingRDD` over `createDataFrame(<list>)`, a",
+        "Python-worker task per slice — none should), and whether any window",
+        "runs unpartitioned (the single-task trap — none should).",
         "",
     ]
     targets = [(n, None) for n in AUDIT if n in qs]
     targets += [(n, b) for n, b in AUDIT_BUILDERS.items()]
     for name, builder in targets:
         df = builder(spark) if builder else qs[name](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        jplan = df._jdf.queryExecution().executedPlan()
+        plan = jplan.toString()
         scans = sorted(
             {ln.strip() for ln in plan.splitlines() if "ReadSchema" in ln}
         )
@@ -352,7 +371,10 @@ def main() -> None:
         )
         lines.append(f"## {name}")
         lines.append("")
-        lines.append(f"- exchanges: {n_exch} (broadcast: {n_bcast})")
+        lines.append(
+            f"- exchanges: {n_exch} (broadcast: {n_bcast}); pickled Python "
+            f"RDD scans: {count_python_rdd_scans(jplan)}"
+        )
         annotations = []
         if offset_windows:
             annotations.append(
