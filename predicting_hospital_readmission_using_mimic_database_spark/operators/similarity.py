@@ -22,7 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..session import local_frame
+from ..session import kernel_on_driver, local_frame, pandas_kernel
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -226,7 +226,11 @@ def knn_join_broadcast(
     and each Arrow batch of the big side computes all pairwise distances
     as one numpy matmul — no shuffle, no candidate join, linear scan of
     the big side only. At 1000 executors the big side streams in parallel
-    and the broadcast is the only data movement.
+    and the broadcast is the only data movement. When the big side's
+    input plus output fits under Spark's broadcast bound, the same kernel
+    runs on the driver instead (:func:`~..session.pandas_kernel`), with
+    no broadcast and no Python worker; a self-join (SMOTE) feeds it the
+    rows already collected.
 
     Contrast with :func:`brp_knn_pairs` (LSH): on corpora whose kNN
     distance approaches the background pair distance (e.g. near-uniform
@@ -286,15 +290,31 @@ def knn_join_broadcast(
     ids = np.asarray([r["i"] for r in rows], dtype=b_np)
     S = np.asarray([r["a"] for r in rows], dtype=np.float64)
     s_sq = (S * S).sum(axis=1)
-    bc = big.sparkSession.sparkContext.broadcast((ids, S, s_sq))
-
     kk = int(k)
     excl = bool(exclude_self)
+    src = big.select(
+        F.col(id_col).alias("__id"),
+        F.col(array_col).cast("array<double>").alias("__arr"),
+    ).filter(F.col("__arr").isNotNull())
+    # input plus output bytes: the big side's Spark size statistic (the
+    # collected rows themselves for a self-join), and k (a_id, b_id,
+    # dist, rank) rows per big row
+    row_b = 8 * (S.shape[1] + 1)
+    self_join = big is small and id_col == s_id and array_col == s_arr
+    n_big = len(rows) if self_join else int(
+        src._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    ) // row_b
+    est = n_big * (row_b + kk * 28)
+    # on the driver the kernel reads the matrix from its closure; only
+    # executor tasks need it broadcast
+    held, bc = (ids, S, s_sq), None
+    if not kernel_on_driver(big.sparkSession, est):
+        held, bc = None, big.sparkSession.sparkContext.broadcast(held)
 
     def gen(batches):
         import pandas as pd
 
-        b_ids, b_S, b_sq = bc.value
+        b_ids, b_S, b_sq = held if bc is None else bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -330,12 +350,10 @@ def knn_join_broadcast(
                     }
                 )
 
-    src = big.select(
-        F.col(id_col).alias("__id"),
-        F.col(array_col).cast("array<double>").alias("__arr"),
-    ).filter(F.col("__arr").isNotNull())
-    return src.mapInPandas(
-        gen, f"a_id {a_ddl}, b_id {b_ddl}, dist double, rank int"
+    return pandas_kernel(
+        src, gen, f"a_id {a_ddl}, b_id {b_ddl}, dist double, rank int",
+        est_bytes=est,
+        spec=[(r["i"], r["a"]) for r in rows] if self_join else None,
     )
 
 
@@ -950,8 +968,10 @@ def topk_ivf_pq(
     rank 1..k, exact-cosine ordered, id tiebreak.
 
     Plan shape: centroids + codebooks + per-cell LUTs are driver-built
-    KBs riding ONE broadcast; candidate selection is a cell-id filter
-    on the assignment (with a parquet index partitioned by cell —
+    KBs riding ONE broadcast (none when the ADC kernel fits under the
+    broadcast bound and runs on the driver, through
+    :func:`~..session.pandas_kernel`); candidate selection is a cell-id
+    filter on the assignment (with a parquet index partitioned by cell —
     :func:`build_ivf_index` — this prunes directories); ADC top-m and
     the final top-k are ``orderBy().limit()`` =
     TakeOrderedAndProject — NO corpus-scale window anywhere; the exact
@@ -1021,7 +1041,14 @@ def topk_ivf_pq(
                  ).sum(axis=1)
                 for m in range(len(B))
             ])
-        bc = df.sparkSession.sparkContext.broadcast(luts)
+        # the ADC kernel's input plus output bytes: at most n candidate
+        # (id, cell, code) rows and n (id, distance) rows; on the driver
+        # it reads the tables from its closure, only executors need
+        # them broadcast
+        est = n * 8 * (len(B) + 4)
+        held, bc = luts, None
+        if not kernel_on_driver(df.sparkSession, est):
+            held, bc = None, df.sparkSession.sparkContext.broadcast(luts)
 
         from pyspark.sql.types import (
             DoubleType,
@@ -1041,7 +1068,7 @@ def topk_ivf_pq(
         ])
 
         def adc(batches):
-            luts = bc.value
+            luts = held if bc is None else bc.value
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -1057,7 +1084,7 @@ def topk_ivf_pq(
                 yield pdf[[id_col]].assign(__adc=out)
 
         shortlist = (
-            cand.mapInPandas(adc, adc_schema)
+            pandas_kernel(cand, adc, adc_schema, est_bytes=est)
             .orderBy(F.col("__adc").asc(), F.col(id_col).asc())
             .limit(rerank)
         )

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from .plans.readmission import readmit_labels
 from .registry import query
+from .session import local_frame
 from .sources.io import read_table
 from .streaming import ingest as ING
 
@@ -2098,8 +2099,8 @@ def q_st25(spark, sf):
         # vacuumed file was planned: only the new append surfaces
         assert {r[2] for r in got3} == {5}, sorted({r[2] for r in got3})
         assert len(got3) == late2.count()
-        return spark.createDataFrame(
-            got1 + got2 + got3,
+        return local_frame(
+            spark, got1 + got2 + got3,
             "c_custkey long, cents long, _commit_version long",
         )
     finally:
@@ -2210,8 +2211,8 @@ def q_st26(spark, sf):
         got2 = drain()
         assert {r[2] for r in got2} == {4}, sorted({r[2] for r in got2})
         assert len(got2) == late.count()
-        return spark.createDataFrame(
-            got1 + got2,
+        return local_frame(
+            spark, got1 + got2,
             "c_custkey long, cents long, _snapshot_id long",
         )
     finally:

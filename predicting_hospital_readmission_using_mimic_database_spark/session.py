@@ -103,13 +103,18 @@ def _clone(
     """The one session-clone recipe behind :func:`loop_session` and
     :func:`small_plan_spark`: ``newSession()`` (shared SparkContext,
     block and cache managers; its own SQLConf), brought to the engine
-    baseline, then the caller's time zone, ``overrides`` and the
-    shuffle-partition pin. The overrides are remembered on the clone, so
-    a later :func:`tune_session` re-applies them over the baseline."""
+    baseline, then the caller's time zone and broadcast bound,
+    ``overrides`` and the shuffle-partition pin. The overrides are
+    remembered on the clone, so a later :func:`tune_session` re-applies
+    them over the baseline."""
     confs = {
-        "spark.sql.session.timeZone": base.conf.get("spark.sql.session.timeZone"),
-        **overrides,
+        key: base.conf.get(key)
+        for key in (
+            "spark.sql.session.timeZone",
+            "spark.sql.autoBroadcastJoinThreshold",
+        )
     }
+    confs.update(overrides)
     if shuffle_partitions:
         confs["spark.sql.shuffle.partitions"] = str(max(1, int(shuffle_partitions)))
     sess = base.newSession()
@@ -323,21 +328,12 @@ def _arrow_value(dt):
     return None
 
 
-def local_frame(spark: SparkSession, rows, schema):
-    """The one way the engine turns driver-held rows (strategy
-    summaries, split quotas, file lists, metadata tables) into a frame:
-    through an Arrow table, so the plan is a JVM ``LocalRelation``.
-    ``spark.createDataFrame(<list>)`` instead pickles the rows into a
-    Python RDD, and every action over it runs a Python-worker task per
-    slice. ``schema`` is a ``StructType`` or a DDL string; ``rows`` are
-    tuples or Rows (positional) or dicts (by name); ``[]`` gives an
-    empty frame with exactly ``schema``."""
+def _arrow_table(rows, schema):
+    """``rows`` (tuples or Rows, positional, or dicts, by name) as a
+    pyarrow Table of ``schema``'s Arrow form."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    if isinstance(schema, str):
-        schema = _parse_datatype_string(schema)
     arrow = to_arrow_schema(schema)
     names = schema.names
     cols = [[] for _ in names]
@@ -351,7 +347,144 @@ def local_frame(spark: SparkSession, rows, schema):
         arrays.append(
             pa.array([conv(v) for v in col] if conv else col, type=af.type)
         )
-    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
+    return pa.Table.from_arrays(arrays, schema=arrow)
+
+
+def local_frame(spark: SparkSession, rows, schema):
+    """The one way the engine turns driver-held rows (strategy
+    summaries, split quotas, file lists, metadata tables) into a frame:
+    through an Arrow table, so the plan is a JVM ``LocalRelation``.
+    ``spark.createDataFrame(<list>)`` instead pickles the rows into a
+    Python RDD, and every action over it runs a Python-worker task per
+    slice. ``schema`` is a ``StructType`` or a DDL string; ``rows`` are
+    tuples or Rows (positional) or dicts (by name), or a pyarrow Table
+    already in ``schema``'s Arrow form; ``[]`` gives an empty frame
+    with exactly ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    table = rows if isinstance(rows, pa.Table) else _arrow_table(rows, schema)
+    return spark.createDataFrame(table, schema)
+
+
+# ----------------------------------------------------------------------
+# pandas kernels: executor tasks at scale, the driver below the bound
+# ----------------------------------------------------------------------
+#: the worker settings a pandas kernel's conversions read, with the
+#: defaults a worker assumes when the session leaves them unset
+_KERNEL_CONFS = {
+    "spark.sql.session.timeZone": None,
+    "spark.sql.execution.pandas.convertToArrowArraySafely": "false",
+    "spark.sql.legacy.execution.pandas.groupedMap.assignColumnsByName": "true",
+    "spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled": "false",
+    "spark.sql.execution.arrow.useLargeVarTypes": "false",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
+}
+
+
+def kernel_on_driver(spark: SparkSession, est_bytes: int | None) -> bool:
+    """Whether :func:`pandas_kernel` runs a kernel of ``est_bytes`` on
+    the driver: at or below the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (-1: never)."""
+    bound = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return est_bytes is not None and 0 <= est_bytes <= bound
+
+
+def pandas_kernel(df, fn, schema, *, group_by=None, est_bytes, spec=None):
+    """The one way the engine runs a pandas kernel over a frame:
+    ``df.mapInPandas(fn, schema)``, or with ``group_by``
+    ``df.groupBy(*group_by).applyInPandas(fn, schema)``.
+
+    At scale (``est_bytes`` None, or above the session's
+    ``spark.sql.autoBroadcastJoinThreshold``, where -1 means never)
+    that is exactly what it returns: the kernel runs in Python workers
+    on the executors. Below that bound -- Spark's own limit on a
+    relation it collects whole to the driver -- the same ``fn`` runs on
+    the driver, so a small plan forks no Python daemon or worker. Its
+    input is ``spec`` (the rows ``df`` was built from, when the caller
+    holds them) or one ``toArrow()`` collect of ``df``; it sees the
+    batches (at most ``maxRecordsPerBatch`` rows) or the per-key groups
+    an executor task would give it, converted to and from pandas by the
+    worker's own serializer, and the result is a ``LocalRelation``
+    (:func:`local_frame`). ``est_bytes`` is the caller's bound on the
+    kernel's input plus output bytes, from metadata it already holds,
+    never from a job."""
+    if not kernel_on_driver(df.sparkSession, est_bytes):
+        if group_by is None:
+            return df.mapInPandas(fn, schema)
+        return df.groupBy(*group_by).applyInPandas(fn, schema)
+    return _driver_kernel(df, fn, schema, group_by, spec)
+
+
+def _driver_kernel(df, fn, schema, group_by, spec):
+    """:func:`pandas_kernel` below the bound: ``fn`` on the driver,
+    through the worker's own wrappers (result checks) and serializer
+    (Arrow <-> pandas both ways, NULL-bearing integer columns that come
+    back as float NaN included)."""
+    import inspect
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark import worker as W
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    spark = df.sparkSession
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    conf = {k: spark.conf.get(k, d) for k, d in _KERNEL_CONFS.items()}
+    ser = ArrowStreamPandasUDFSerializer(
+        conf["spark.sql.session.timeZone"],
+        conf["spark.sql.execution.pandas.convertToArrowArraySafely"] == "true",
+        W.assign_cols_by_name(conf),
+        arrow_cast=True,
+        int_to_decimal_coercion_enabled=conf[
+            "spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled"
+        ] == "true",
+    )
+    table = _arrow_table(spec, df.schema) if spec is not None else df.toArrow()
+
+    def series(t):
+        return [ser.arrow_to_pandas(c, i) for i, c in enumerate(t.itercolumns())]
+
+    if group_by is None:
+        n = int(conf["spark.sql.execution.arrow.maxRecordsPerBatch"])
+        batches = table.to_batches(max_chunksize=n) if n > 0 else table.to_batches()
+        pdfs = (
+            pd.concat(series(pa.Table.from_batches([b])), axis=1)
+            for b in batches if b.num_rows
+        )
+        results = W.wrap_pandas_batch_iter_udf(fn, schema, conf)(pdfs)
+    else:
+        udf = W.wrap_grouped_map_pandas_udf(
+            fn, schema, inspect.getfullargspec(fn), conf
+        )
+        gid = (
+            table.select(list(group_by)).to_pandas()
+            .groupby(list(group_by), dropna=False, sort=False).ngroup()
+            .to_numpy()
+        )
+        order = np.argsort(gid, kind="stable")
+        cuts = np.flatnonzero(np.diff(gid[order])) + 1
+        pos = [table.schema.get_field_index(c) for c in group_by]
+        results = []
+        for idx in np.split(order, cuts) if len(order) else []:
+            vals = series(table.take(idx))
+            results += udf([vals[p] for p in pos], vals)
+    out = [ser._create_batch(r).column(0) for r in results]
+    arrow = to_arrow_schema(schema)
+    return local_frame(
+        spark,
+        pa.Table.from_batches(
+            [pa.RecordBatch.from_struct_array(a).cast(arrow) for a in out],
+            schema=arrow,
+        ),
+        schema,
+    )
 
 
 def adopt_frame(base: SparkSession, df):

@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..session import local_frame
+from ..session import local_frame, pandas_kernel
 
 DELTA_LOG_DIR = "_delta_log"
 _COMMIT_RE = re.compile(r"^(\d{20})\.json$")
@@ -2239,14 +2239,16 @@ def _dv_positions_df(
     posk: str,
 ) -> DataFrame:
     """(file key, deleted row index) frame for the DV anti-join, with
-    the roaring decode ON EXECUTORS: the driver ships only the tiny
-    (file path, descriptor JSON) spec — one input partition per
+    the roaring decode ON EXECUTORS at scale: the driver ships only the
+    tiny (file path, descriptor JSON) spec — one input partition per
     descriptor — and mapInPandas fans each out to its deleted
     positions. A multi-million-position vector never materializes as a
     driver-side Python list (the broadcast build is Spark's own
-    machinery over the decoded frame, not a driver loop). The streaming
-    source (delta_stream.py) applies the same per-file decode inside
-    its partitions."""
+    machinery over the decoded frame, not a driver loop). Vectors whose
+    decoded rows fit under the broadcast bound decode on the driver
+    (:func:`~..session.pandas_kernel`). The streaming source
+    (delta_stream.py) applies the same per-file decode inside its
+    partitions."""
     from pyspark.sql.types import LongType, StringType, StructField
 
     # structural gate stays on the DRIVER (cheap, no position decode):
@@ -2258,10 +2260,18 @@ def _dv_positions_df(
             raise ValueError(
                 f"unknown deletionVector storageType {st!r} on {rel}"
             )
+    items = sorted(dv_live.items())
     rows = [
         (os.path.abspath(os.path.join(root, rel)), json.dumps(desc))
-        for rel, desc in sorted(dv_live.items())
+        for rel, desc in items
     ]
+    # input plus output bytes: the spec rows, and one (file key,
+    # position) row per deleted position (each vector's cardinality)
+    cards = [desc.get("cardinality") for _rel, desc in items]
+    est = None if None in cards else sum(
+        len(k) + len(dj) + int(c) * (len(k) + 8)
+        for (k, dj), c in zip(rows, cards)
+    )
     spec = local_frame(
         spark,
         rows, "__dv_key string, __dv_desc string"
@@ -2291,7 +2301,7 @@ def _dv_positions_df(
                         {key: k, posk: pd.array(poss, dtype="int64")}
                     )
 
-    return spec.mapInPandas(decode, out_schema)
+    return pandas_kernel(spec, decode, out_schema, est_bytes=est, spec=rows)
 
 
 def read_delta_changes(

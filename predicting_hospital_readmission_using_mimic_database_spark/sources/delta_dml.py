@@ -58,7 +58,12 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..session import local_frame, small_plan_session, small_plan_spark
+from ..session import (
+    local_frame,
+    pandas_kernel,
+    small_plan_session,
+    small_plan_spark,
+)
 
 
 def _live_bytes_est(root: str, live: dict) -> int:
@@ -264,10 +269,14 @@ def _scan_with_positions(
 
 def _write_dvs_for_hits(
     hits: DataFrame, root: str, live: dict, dvs: dict, key: str, posk: str,
+    n_hits: int | None,
 ) -> list[dict]:
     """Serialize one MERGED deletion vector per touched file, on
     executors (one ``applyInPandas`` task per file): new hit positions
-    ∪ the file's existing DV positions. Returns one driver-side summary
+    ∪ the file's existing DV positions. ``n_hits`` bounds the hit rows
+    (None: unknown); when the kernel's bytes fit under the broadcast
+    bound the vectors are written on the driver instead
+    (:func:`~..session.pandas_kernel`). Returns one driver-side summary
     dict per touched file — never a position list."""
     root_abs = os.path.abspath(root)
     #: abs data path -> (rel path, existing descriptor JSON | None);
@@ -316,10 +325,20 @@ def _write_dvs_for_hits(
             "new_deletes": int(len(merged) - len(old)),
         }])
 
+    # input plus output bytes: the (file, position) hit rows, the
+    # existing vectors' positions (cardinality x 8) and one summary row
+    # per live file
+    path_b = max(map(len, desc_of), default=0)
+    est = None if n_hits is None else (
+        n_hits * (path_b + 8)
+        + 8 * sum(int(d.get("cardinality") or 0)
+                  for rel, d in dvs.items() if rel in live)
+        + len(live) * (path_b + 64)
+    )
     return [
         r.asDict()
-        for r in hits.groupBy(key).applyInPandas(
-            write_group, out_schema
+        for r in pandas_kernel(
+            hits, write_group, out_schema, group_by=[key], est_bytes=est
         ).collect()
     ]
 
@@ -688,6 +707,21 @@ class _DmlBase:
         return str(self.conf.get("delta.enableChangeDataFeed", "")
                    ).lower() == "true"
 
+    def live_rows(self) -> int | None:
+        """The live files' row total from their add-action stats
+        (``numRecords``); None when any file carries none."""
+        total = 0
+        for rel in self.live:
+            nr = None
+            try:
+                nr = json.loads(self.stats_of.get(rel) or "{}").get("numRecords")
+            except (ValueError, TypeError, AttributeError):
+                pass
+            if nr is None:
+                return None
+            total += int(nr)
+        return total
+
 
 def _commit_row_delta(
     root: str, base: _DmlBase, operation: str,
@@ -827,7 +861,8 @@ def delete_from_delta(
             )
 
         results = _write_dvs_for_hits(
-            hits.select(key, posk), root, base.live, base.dvs, key, posk
+            hits.select(key, posk), root, base.live, base.dvs, key, posk,
+            base.live_rows(),
         )
     finally:
         hits.unpersist()
@@ -960,7 +995,8 @@ def update_delta(
             )
 
         results = _write_dvs_for_hits(
-            hits.select(key, posk), root, base.live, base.dvs, key, posk
+            hits.select(key, posk), root, base.live, base.dvs, key, posk,
+            base.live_rows(),
         )
         placed = (
             _place_files(
@@ -1200,19 +1236,7 @@ def merge_delta(
             # unknown-rows fallback bounds by the WHOLE table's
             # inflated bytes; a partial sum would re-open the
             # oversized-broadcast hole the byte gate exists to close)
-            tot_rows = 0
-            for rel in base.live:
-                st = base.stats_of.get(rel)
-                nr = None
-                if st:
-                    try:
-                        nr = json.loads(st).get("numRecords")
-                    except (ValueError, TypeError):
-                        nr = None
-                if nr is None:
-                    tot_rows = 0  # any file without stats: row total unknown
-                    break
-                tot_rows += int(nr)
+            tot_rows = base.live_rows() or 0  # 0: row total unknown
             can_semi = (
                 n_src <= broadcast_source_rows
                 and n_src * schema_row_bytes(key_schema) <= broadcast_bytes
@@ -1318,6 +1342,9 @@ def merge_delta(
             results = (
                 _write_dvs_for_hits(
                     doomed, root, base.live, base.dvs, key, posk,
+                    # the survivor estimate: at most one target row per
+                    # source key, or the whole table under full sync
+                    base.live_rows() if by_source is not None else n_src,
                 )
                 if tgt is not None else []
             )

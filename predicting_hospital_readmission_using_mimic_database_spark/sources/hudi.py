@@ -57,7 +57,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..session import local_frame
+from ..session import local_frame, pandas_kernel
 
 HOODIE_DIR = ".hoodie"
 META_COLS = (
@@ -1783,7 +1783,9 @@ def _read_mor(
     input partition per log file) after a driver-side HEADER-ONLY scan
     (`hudi_log.scan_block_headers` seeks over content) that gates block
     types and filters uncommitted/time-traveled-past instants — the
-    driver never touches record payloads. The merge is one window over
+    driver touches record payloads only when the logs' decoded rows fit
+    under the broadcast bound (:func:`~..session.pandas_kernel`). The
+    merge is one window over
     ``(_hoodie_record_key [, _hoodie_partition_path])`` ordered by
     (instant, log position) — the same per-key resolution a native
     Hudi MOR reader performs, expressed as one key-partitioned shuffle
@@ -2149,7 +2151,14 @@ def _read_mor(
                             out["__ord"] = ords
                         yield out
 
-        log_df = fdf.mapInPandas(parse, log_schema)
+        # input plus output bytes: the log files' sizes, inflated to
+        # the decoded rows' in-memory width
+        from .io import BROADCAST_INFLATION
+
+        est = BROADCAST_INFLATION * sum(os.path.getsize(p) for p, _i in valid)
+        log_df = pandas_kernel(
+            fdf, parse, log_schema, est_bytes=est, spec=file_rows
+        )
     else:
         log_df = None
     if log_df is not None:

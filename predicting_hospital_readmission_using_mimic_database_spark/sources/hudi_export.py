@@ -49,7 +49,12 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from ..session import local_frame, small_plan_session, small_plan_spark
+from ..session import (
+    local_frame,
+    pandas_kernel,
+    small_plan_session,
+    small_plan_spark,
+)
 from .hudi import HOODIE_DIR
 
 
@@ -193,7 +198,8 @@ def export_hudi(
     (:mod:`.hudi_log`) — so write amplification is the CHANGE SIZE,
     not the bucket size (a 1-row upsert appends ~1 row, never a
     rewrite of the group's base file). Log files are written ON
-    EXECUTORS (one applyInPandas task per touched group); the diff
+    EXECUTORS (one applyInPandas task per touched group), or on the
+    driver below the broadcast bound; the diff
     reads only the touched groups' published state through the same
     ``_read_mor`` fold every reader uses. Combinable with
     ``partition_by``: group identity is (partition, fileId), so a key
@@ -472,7 +478,7 @@ def export_hudi(
         with small_plan_session(cur, est_bytes=est) as (_s, (cur2,)):
             written = _export_mor_delta(
                 table, dest, inst, sorted(touched), cur2, key_expr,
-                _row_hash, prev_slices, prev_logs, pp_expr,
+                _row_hash, prev_slices, prev_logs, pp_expr, est,
                 reject_clustering_groups=cl_cand,
             )
         _publish_instant(
@@ -923,7 +929,7 @@ def _group_log_path(
 
 def _export_mor_delta(
     table, dest: str, inst: str, buckets: list, cur, key_expr, row_hash,
-    prev_slices: dict, prev_logs: dict, pp_expr,
+    prev_slices: dict, prev_logs: dict, pp_expr, est_bytes: int | None,
     reject_clustering_groups: dict | None = None,
 ) -> dict:
     """The MOR incremental publish: each touched bucket's per-key diff
@@ -940,7 +946,9 @@ def _export_mor_delta(
     starts as a LOG-ONLY file group. The diff is a full-outer join on
     the record key over only the touched groups' rows; log files are
     written ON EXECUTORS, one applyInPandas task per group (groups
-    write distinct files, so tasks never contend). Returns the commit
+    write distinct files, so tasks never contend) — on the driver when
+    ``est_bytes``, the publish's byte bound, fits under the broadcast
+    bound (:func:`~..session.pandas_kernel`). Returns the commit
     marker's ``partitionToWriteStats``."""
     from pyspark.sql import functions as F
 
@@ -1119,8 +1127,9 @@ def _export_mor_delta(
                  "deletes": [len(dels_p)]}
             )
 
-        summary = routed.groupBy("__lp").applyInPandas(
-            write_group, "path string, upserts long, deletes long"
+        summary = pandas_kernel(
+            routed, write_group, "path string, upserts long, deletes long",
+            group_by=["__lp"], est_bytes=est_bytes,
         ).collect()
     finally:
         changes.unpersist()
@@ -2385,8 +2394,9 @@ def delete_from_hudi(spark, dest: str, predicate: str) -> dict:
 
     Scale: one predicate-filtered read over the fold, tombstone bytes
     are O(deleted keys), block appends run per-group on EXECUTORS
-    (``applyInPandas`` — the driver never sees a key list), and the
-    commit is three timeline markers."""
+    (``applyInPandas`` — the driver never sees a key list) unless the
+    table fits under the broadcast bound, and the commit is three
+    timeline markers."""
     from . import hudi_log as HL
     from .hudi import HudiProtocolError
 
@@ -2394,7 +2404,8 @@ def delete_from_hudi(spark, dest: str, predicate: str) -> dict:
     # op (collected summaries, appended blocks): byte-gate the whole
     # computation — provably-small published tables run it AQE-off
     # with an input-derived pin, big ones keep the caller's session
-    spark = small_plan_spark(spark, est_bytes=_dest_bytes_est(dest))
+    est = _dest_bytes_est(dest)
+    spark = small_plan_spark(spark, est_bytes=est)
     props, precombine, hdir, scan, fid_expr = _mor_dml_scan(
         spark, dest, "delete_from_hudi", "DELETE"
     )
@@ -2453,7 +2464,7 @@ def delete_from_hudi(spark, dest: str, predicate: str) -> dict:
 
         inst, summary = _commit_log_dml(
             spark, dest, hdir, hits, targets, "delete",
-            "delete_from_hudi", write_block,
+            "delete_from_hudi", write_block, est,
         )
     finally:
         hits.unpersist()
@@ -2507,7 +2518,7 @@ def _mor_dml_scan(spark, dest: str, what: str, verb: str):
 
 def _commit_log_dml(
     spark, dest: str, hdir: str, hits, targets: list, op: str,
-    what: str, write_block,
+    what: str, write_block, est_bytes: int | None,
 ) -> tuple[str, list]:
     """The commit half every log-appending DML op shares: the
     pending-clustering update-conflict gate over the touched groups,
@@ -2519,7 +2530,9 @@ def _commit_log_dml(
     group, then inflight -> completed markers with the shared
     ``_log_write_stats`` body and the MDT sync. ``hits`` must carry
     ``__pp``/``__fid`` (+ whatever ``write_block`` reads) and is the
-    caller's to persist/unpersist. Returns ``(instant, summary
+    caller's to persist/unpersist; ``est_bytes`` bounds its bytes, and
+    under the broadcast bound the blocks are written on the driver
+    (:func:`~..session.pandas_kernel`). Returns ``(instant, summary
     rows)``."""
     import re as _re
 
@@ -2589,8 +2602,9 @@ def _commit_log_dml(
             {"path": [path], "upserts": [ups], "deletes": [dels]}
         )
 
-    summary = routed.groupBy("__lp").applyInPandas(
-        write_group, "path string, upserts long, deletes long"
+    summary = pandas_kernel(
+        routed, write_group, "path string, upserts long, deletes long",
+        group_by=["__lp"], est_bytes=est_bytes,
     ).collect()
 
     written = _log_write_stats(summary, dest)
@@ -2630,8 +2644,8 @@ def update_hudi(
     matching nothing claims no instant and commits NOTHING.
 
     Scale: one predicate-filtered MOR fold + O(updated rows) avro
-    bytes written per-group on executors; commit is three timeline
-    markers."""
+    bytes written per-group on executors (on the driver below the
+    broadcast bound); commit is three timeline markers."""
     from pyspark.sql.types import StructType
 
     from . import hudi_log as HL
@@ -2639,7 +2653,8 @@ def update_hudi(
 
     # byte-gate the whole op (delete_from_hudi's rule): small published
     # tables run AQE-off with an input-derived pin, big ones untouched
-    spark = small_plan_spark(spark, est_bytes=_dest_bytes_est(dest))
+    est = _dest_bytes_est(dest)
+    spark = small_plan_spark(spark, est_bytes=est)
     props, precombine, hdir, scan, fid_expr = _mor_dml_scan(
         spark, dest, "update_hudi", "update"
     )
@@ -2747,7 +2762,7 @@ def update_hudi(
 
         inst, summary = _commit_log_dml(
             spark, dest, hdir, hits, targets, "update",
-            "update_hudi", write_block,
+            "update_hudi", write_block, est,
         )
     finally:
         hits.unpersist()

@@ -74,7 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .avro_ocf import read_avro
-from ..session import local_frame
+from ..session import local_frame, pandas_kernel
 
 
 class IcebergProtocolError(NotImplementedError):
@@ -1434,7 +1434,9 @@ def _dv_deletes_df(
     src: str | None = None,
 ):
     """(file key, deleted row index) frame for format-v3 DELETION
-    VECTORS with the roaring decode ON EXECUTORS: the driver ships
+    VECTORS with the roaring decode ON EXECUTORS at scale (on the
+    driver when the decoded rows fit under the broadcast bound, through
+    :func:`~..session.pandas_kernel`): the driver ships
     only the tiny (puffin path, offset, length, referenced file) spec
     — one input partition per blob — and mapInPandas fans each out to
     its deleted positions (sources/puffin.py verifies blob magic +
@@ -1499,8 +1501,18 @@ def _dv_deletes_df(
                     out[src] = [int(r.srcid)] * len(vals)
                 yield pd.DataFrame(out)
 
+    # input plus output bytes: the spec rows, and one (file key,
+    # position[, source]) row per deleted position (each blob's
+    # cardinality from its manifest entry)
+    width = 16 if src else 8
+    est = None if any(r[4] is None for r in rows) else sum(
+        len(r[0]) + len(r[3]) + 40 + r[4] * (len(r[3]) + width) for r in rows
+    )
     sdf = local_frame(spark, rows, spec_schema)
-    return sdf.repartition(max(1, len(rows))).mapInPandas(decode, out_schema)
+    return pandas_kernel(
+        sdf.repartition(max(1, len(rows))), decode, out_schema,
+        est_bytes=est, spec=rows,
+    )
 
 
 def _transform_result_type(transform: str, src_type) -> str | None:

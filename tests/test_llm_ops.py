@@ -8,6 +8,7 @@ from predicting_hospital_readmission_using_mimic_database_spark.operators import
 from predicting_hospital_readmission_using_mimic_database_spark.operators import multimodal as MM
 from predicting_hospital_readmission_using_mimic_database_spark.operators import similarity as SI
 from predicting_hospital_readmission_using_mimic_database_spark.operators import textstats as TS
+from predicting_hospital_readmission_using_mimic_database_spark.session import local_frame
 
 
 def test_dedup_exact_keeps_min_id(spark):
@@ -587,8 +588,8 @@ def test_multimodal_corrupt_image_raises(spark):
 
 
 def test_word_ngrams_short_arrays(spark):
-    df = spark.createDataFrame(
-        [(1, ["a", "b"]), (2, []), (3, ["a", "b", "c"])], "id long, toks array<string>"
+    df = local_frame(
+        spark, [(1, ["a", "b"]), (2, []), (3, ["a", "b", "c"])], "id long, toks array<string>"
     )
     out = {r["id"]: r["sh"] for r in df.select("id", DD.word_ngrams(F.col("toks"), 3).alias("sh")).collect()}
     assert out == {1: [], 2: [], 3: ["a b c"]}

@@ -1,6 +1,7 @@
 """session.local_frame: driver-held rows become a JVM LocalRelation with
 the same rows and schema ``createDataFrame(<list>)`` gives, and the engine
-layers build driver-held frames through it alone."""
+layers build driver-held frames through it alone (and run their pandas
+kernels through session.pandas_kernel alone)."""
 
 import ast
 import datetime
@@ -105,6 +106,33 @@ def test_engine_layers_build_frames_only_through_local_frame():
             if (
                 isinstance(node, ast.Attribute)
                 and node.attr == "createDataFrame"
+                and id(node) not in allowed
+            ):
+                offenders.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
+    assert offenders == []
+
+
+def test_engine_kernels_run_only_through_pandas_kernel():
+    """Source lint (no Spark): in ``sources/`` and the kNN module,
+    ``mapInPandas(`` and ``applyInPandas(`` appear only inside
+    ``session.pandas_kernel``, which runs small kernels on the driver."""
+    files = [os.path.join(PKG, "session.py"), os.path.join(PKG, "operators", "similarity.py")]
+    files += sorted(glob.glob(os.path.join(PKG, "sources", "*.py")))
+    offenders = []
+    for path in files:
+        tree = ast.parse(open(path).read())
+        allowed = set()
+        if path.endswith("session.py"):
+            fn = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "pandas_kernel"
+            )
+            allowed = {id(n) for n in ast.walk(fn)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("mapInPandas", "applyInPandas")
                 and id(node) not in allowed
             ):
                 offenders.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")

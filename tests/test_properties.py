@@ -7,6 +7,7 @@ import pyspark.sql.functions as F
 
 from predicting_hospital_readmission_using_mimic_database_spark.ml import metrics as ME
 from predicting_hospital_readmission_using_mimic_database_spark.operators import relational as R
+from predicting_hospital_readmission_using_mimic_database_spark.session import local_frame
 
 _slow = settings(
     max_examples=8, deadline=None,
@@ -113,8 +114,8 @@ def test_band_join_equals_nested_loop(spark, raw, band_cents):
     (ints scaled by 0.01 exercise the BETWEEN fp boundary)."""
     vals = [v * 0.01 for v in raw]
     band = band_cents * 0.01
-    a = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "a_id long, a_v double")
-    b = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "b_id long, b_v double")
+    a = local_frame(spark, list(enumerate(vals)), "a_id long, a_v double")
+    b = local_frame(spark, list(enumerate(vals)), "b_id long, b_v double")
     got = {
         (r["a_id"], r["b_id"])
         for r in R.band_join(a, b, "a_v", "b_v", band=band).collect()
@@ -141,11 +142,11 @@ def test_band_join_outer_equals_nested_loop(spark, raw_a, raw_b, band_cents):
     unmatched rows null-extend exactly once, multiplicity preserved,
     including band=0 (exact equality) and an empty right side."""
     band = band_cents * 0.01
-    a = spark.createDataFrame(
-        [(i, v * 0.01) for i, v in enumerate(raw_a)], "a_id long, a_v double"
+    a = local_frame(
+        spark, [(i, v * 0.01) for i, v in enumerate(raw_a)], "a_id long, a_v double"
     )
-    b = spark.createDataFrame(
-        [(i, v * 0.01) for i, v in enumerate(raw_b)], "b_id long, b_v double"
+    b = local_frame(
+        spark, [(i, v * 0.01) for i, v in enumerate(raw_b)], "b_id long, b_v double"
     )
     cond = (F.col("b_v") >= F.col("a_v") - band) & (F.col("b_v") <= F.col("a_v") + band)
     for how in ("left", "full"):

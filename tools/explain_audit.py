@@ -2,8 +2,8 @@
 """Dump plan-posture evidence for the headline queries into PLANS.md.
 
 For each query: the parquet ReadSchema lines (column pruning), pushed
-filters, exchange/broadcast counts, pickled Python RDD scans, and
-single-partition-window detection
+filters, exchange/broadcast counts, Python-UDF nodes and pickled Python
+RDD scans, and single-partition-window detection
 — the structural facts behind the 100 TB claims. Run after operator
 changes; the committed PLANS.md is the reviewable artifact.
 """
@@ -106,19 +106,35 @@ def count_unpartitioned_windows(plan: str) -> tuple[int, int, int]:
     return unbounded, offsets, post_limit
 
 
-def count_python_rdd_scans(node) -> int:
-    """Count ``Scan ExistingRDD`` leaves fed by a pickled Python RDD
-    (``spark.createDataFrame(<list>)``): every action over such a frame
-    runs one Python-worker task per slice, a Python boundary that no
-    Arrow/pandas node name shows. A ``localCheckpoint`` frame prints the
-    same node name, so the scan's RDD lineage decides."""
+#: physical operators that run Python UDFs in Python workers
+PY_UDF_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+)
+
+
+def count_python_boundary(node) -> tuple[int, int]:
+    """``(Python-UDF nodes, pickled Python RDD scans)`` in a physical
+    plan. The second are ``Scan ExistingRDD`` leaves fed by a pickled
+    Python RDD (``spark.createDataFrame(<list>)``): every action over
+    such a frame runs one Python-worker task per slice, a Python
+    boundary that no Arrow/pandas node name shows. A
+    ``localCheckpoint`` frame prints the same node name, so the scan's
+    RDD lineage decides."""
     name = node.nodeName()
     if name == "AdaptiveSparkPlan":
-        return count_python_rdd_scans(node.executedPlan())
+        return count_python_boundary(node.executedPlan())
     if name == "Scan ExistingRDD":
-        return int("PythonRDD" in node.rdd().toDebugString())
+        return 0, int("PythonRDD" in node.rdd().toDebugString())
+    udfs, scans = int(name in PY_UDF_NODES), 0
     kids = node.children()
-    return sum(count_python_rdd_scans(kids.apply(i)) for i in range(kids.size()))
+    for i in range(kids.size()):
+        u, s = count_python_boundary(kids.apply(i))
+        udfs, scans = udfs + u, scans + s
+    return udfs, scans
 
 
 AUDIT = [
@@ -145,7 +161,7 @@ AUDIT = [
     "t17_bigram_counts",  # plan-side pair transform, TakeOrdered top-50
     "u11_stratified_hash_split",
     "j12_supplier_region_rollup",  # two broadcast dims, one exchange
-    "n5_knn_join_exact",  # mapInPandas matmul, no shuffle
+    "n5_knn_join_exact",  # matmul kernel (driver below the bound), no shuffle
     "w12_session_funnel",  # both session windows share one user_id sort
     # round-5 operators
     "x10_domain_stats",   # explode + ONE shared exchange for both aggs
@@ -341,8 +357,10 @@ def main() -> None:
         "# PLANS — physical-plan audit of headline queries",
         "",
         f"Generated by `python tools/explain_audit.py` at {SF_DIR}. For each",
-        "query: scan schemas (pruning), pushed filters, exchange counts, pickled",
-        "Python RDD scans (`Scan ExistingRDD` over `createDataFrame(<list>)`, a",
+        "query: scan schemas (pruning), pushed filters, exchange counts, the",
+        "Python boundary (Python-UDF nodes: ArrowEvalPython, BatchEvalPython,",
+        "MapInPandas, FlatMapGroupsInPandas, FlatMapCoGroupsInPandas; and pickled",
+        "Python RDD scans, `Scan ExistingRDD` over `createDataFrame(<list>)`, a",
         "Python-worker task per slice — none should), and whether any window",
         "runs unpartitioned (the single-task trap — none should).",
         "",
@@ -371,9 +389,10 @@ def main() -> None:
         )
         lines.append(f"## {name}")
         lines.append("")
+        n_udf, n_pickled = count_python_boundary(jplan)
         lines.append(
-            f"- exchanges: {n_exch} (broadcast: {n_bcast}); pickled Python "
-            f"RDD scans: {count_python_rdd_scans(jplan)}"
+            f"- exchanges: {n_exch} (broadcast: {n_bcast}); Python-UDF "
+            f"nodes: {n_udf}; pickled Python RDD scans: {n_pickled}"
         )
         annotations = []
         if offset_windows:
