@@ -14,12 +14,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import _parse_datatype_string
 
 from .functions import scalar as SC
 from .functions import text as TX
 from .operators import relational as R
 from .plans.readmission import readmit_events, readmit_labels
 from .registry import query
+from .session import local_frame
 from .sources.io import decoded_file_path, read_table
 
 
@@ -710,8 +712,8 @@ def q_u3(spark, sf):
     e = _events(spark, sf)
     tr, te = SA.random_split(e, (0.8, 0.2), seed=42)
     n_tr, n_te, n = tr.count(), te.count(), e.count()
-    return spark.createDataFrame(
-        [(n, bool(n_tr + n_te == n), bool(abs(n_tr / max(n, 1) - 0.8) < 0.05))],
+    return local_frame(
+        spark, [(n, bool(n_tr + n_te == n), bool(abs(n_tr / max(n, 1) - 0.8) < 0.05))],
         "n_total long, partitions_input boolean, train_frac_close boolean",
     )
 
@@ -750,7 +752,8 @@ def q_u5(spark, sf):
     after = {r["pos"]: r["n"] for r in over.groupBy("pos").agg(F.count("*").alias("n")).collect()}
     maj = max(orig, key=orig.get)
     mino = min(orig, key=orig.get)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 after[maj],
@@ -818,8 +821,8 @@ def q_u6(spark, sf):
     n_min, n_synth = mb["n"], sb["n"]
     out.unpersist()
     SA.release_aux_caches(made)
-    return spark.createDataFrame(
-        [(n_min, n_synth, int(viol))],
+    return local_frame(
+        spark, [(n_min, n_synth, int(viol))],
         "n_minority long, n_synthetic long, n_out_of_envelope long",
     )
 
@@ -940,8 +943,8 @@ def q_a2b(spark, sf):
     exact = R.count_distinct(li, "l_partkey", approx=False)
     a = approx.collect()[0]["n_distinct"]
     x = exact.collect()[0]["n_distinct"]
-    return spark.createDataFrame(
-        [(int(x), bool(abs(a - x) <= 0.05 * x))],
+    return local_frame(
+        spark, [(int(x), bool(abs(a - x) <= 0.05 * x))],
         "n_distinct_exact long, hll_within_5pct boolean",
     )
 
@@ -992,8 +995,8 @@ def q_a13b(spark, sf):
         F.round(F.expr("percentile(l_extendedprice, 0.5)"), 6).alias("p50_r"),
     ).collect()[0]
     rel = abs(row["ap50"] - row["p50"]) / max(abs(row["p50"]), 1e-9)
-    return spark.createDataFrame(
-        [(float(row["p50_r"]), bool(rel < 0.02))],
+    return local_frame(
+        spark, [(float(row["p50_r"]), bool(rel < 0.02))],
         "exact_p50 double, approx_within_2pct boolean",
     )
 
@@ -4132,7 +4135,7 @@ def q_s22(spark, sf):
                 "metaData": {
                     "id": "s22",
                     "format": {"provider": "parquet", "options": {}},
-                    "schemaString": spark.createDataFrame([], f"{data_schema}, c_mktsegment string").schema.json(),
+                    "schemaString": _parse_datatype_string(f"{data_schema}, c_mktsegment string").json(),
                     "partitionColumns": ["c_mktsegment"],
                     "configuration": {},
                 }
@@ -9132,8 +9135,8 @@ def q_s81(spark, sf):
     assert read_delta(spark, root, version=0).count() == n
     # duplicate source keys refuse (ANSI MERGE) — explicit literal
     # rows: limit(1) twice could pick two DIFFERENT rows and slip past
-    dup = spark.createDataFrame(
-        [(1, 1), (1, 2)], "c_custkey bigint, cents bigint"
+    dup = local_frame(
+        spark, [(1, 1), (1, 2)], "c_custkey bigint, cents bigint"
     )
     try:
         merge_delta(spark, root, dup, on=["c_custkey"])
@@ -9269,8 +9272,8 @@ def q_s82(spark, sf):
     assert read_iceberg(spark, root, snapshot_id=sid0).count() == n
     # duplicate source keys refuse (ANSI MERGE) — explicit literal
     # rows: limit(1) twice could pick two DIFFERENT rows and slip past
-    dup = spark.createDataFrame(
-        [(1, 1), (1, 2)], "c_custkey bigint, cents bigint"
+    dup = local_frame(
+        spark, [(1, 1), (1, 2)], "c_custkey bigint, cents bigint"
     )
     try:
         merge_iceberg(spark, root, dup, on=["c_custkey"])

@@ -25,6 +25,7 @@ from .ml import metrics as ME
 from .ml import models as MO
 from .qdefs_text import clean_tokens_sql
 from .registry import query
+from .session import local_frame
 from .sources.io import read_table
 
 
@@ -227,8 +228,8 @@ def q_m3(spark, sf):
     auc = ME.auc_metrics(scored, "p1", "y").collect()[0]["roc_auc"]
     n_tr, n_te = train.count(), test.count()
     train.unpersist()
-    return spark.createDataFrame(
-        [(n_tr, n_te, bool(auc is not None and 0.0 <= auc <= 1.0))],
+    return local_frame(
+        spark, [(n_tr, n_te, bool(auc is not None and 0.0 <= auc <= 1.0))],
         "n_train long, n_test long, auc_in_01 boolean",
     )
 
@@ -251,8 +252,8 @@ def q_m4(spark, sf):
         F.min("p1").alias("lo"),
         F.max("p1").alias("hi"),
     ).collect()[0]
-    return spark.createDataFrame(
-        [(row["n"], bool(0.0 <= row["lo"] <= row["hi"] <= 1.0))],
+    return local_frame(
+        spark, [(row["n"], bool(0.0 <= row["lo"] <= row["hi"] <= 1.0))],
         "n long, probs_in_01 boolean",
     )
 
@@ -298,8 +299,8 @@ def q_m5(spark, sf):
     grid = m5_grid_for_n(d.count())
     res = MO.rf_numtrees_sweep(train, test, grid, "features", "y").collect()
     train.unpersist()
-    return spark.createDataFrame(
-        [(r["num_trees"], bool(0.0 <= r["auc"] <= 1.0)) for r in res],
+    return local_frame(
+        spark, [(r["num_trees"], bool(0.0 <= r["auc"] <= 1.0)) for r in res],
         "num_trees int, auc_in_01 boolean",
     )
 
@@ -350,7 +351,8 @@ def q_m6(spark, sf):
     scored = MO.predict_proba(model, d)
     auc = ME.auc_metrics(scored, "p1", "y").collect()[0]["roc_auc"]
     d.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 int(model.coefficients.size),
@@ -383,7 +385,8 @@ def q_m7(spark, sf):
     _, res = MO.grid_search_lr_cv(d, [0.01, 0.1, 1.0, 10.0], "features", "y", folds=5)
     rows = res.collect()
     d.unpersist()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (float(r["C"]), 5, n_rows, bool(0.0 <= r["accuracy"] <= 1.0))
             for r in rows
@@ -413,8 +416,8 @@ def q_m10(spark, sf):
     ).cache()
     res = MO.top_n_retrain(d, cols, "y", ns=[2, 4], num_trees=20, seed=42).collect()
     d.unpersist()
-    return spark.createDataFrame(
-        [(r["n_features"], bool(0.0 <= r["auc"] <= 1.0)) for r in res],
+    return local_frame(
+        spark, [(r["n_features"], bool(0.0 <= r["auc"] <= 1.0)) for r in res],
         "n_features int, auc_in_01 boolean",
     )
 
@@ -673,7 +676,8 @@ def q_e2e(spark, sf):
         r["accuracy"], r["recall"], r["precision"],
         r["specificity"], r["prevalence_at_05"], r["f1"],
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 r["n_users"],
@@ -706,7 +710,8 @@ def q_e8(spark, sf):
     from .plans.full_pipeline import strategy_comparison
 
     rows = strategy_comparison(spark, sf, seed=42).collect()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 r["strategy"],

@@ -43,6 +43,9 @@ def tune_session(spark: SparkSession) -> SparkSession:
     (:func:`_clone`) keeps its own overrides on top of the baseline, so
     re-tuning it (``sources.io.read_table`` does, per read) never turns
     AQE back on under an AQE-off clone.
+
+    It registers no Python data source (a process's first registration
+    forks a ~2 s Python lookup): their readers register them.
     """
     confs = {**_RUNTIME_CONFS, **getattr(spark, "_clone_confs", {})}
     for k, v in confs.items():
@@ -52,14 +55,6 @@ def tune_session(spark: SparkSession) -> SparkSession:
             # conf not settable at runtime in this deployment: keep going,
             # readers have per-read fallbacks
             pass
-    try:
-        # make the engine's Python data sources (format "snapshot" /
-        # "snapshot_changes") available on any session we touch
-        from .sources.pydatasource import register_datasources
-
-        register_datasources(spark)
-    except Exception:
-        pass  # pre-4.0 deployments without the Python DataSource API
     return spark
 
 
@@ -136,12 +131,11 @@ def loop_session(
 
     The clone is first brought to the engine's baseline with
     :func:`tune_session` (``newSession()`` starts from builder-time
-    confs only, so runtime confs like nanos-as-long parquet reading,
-    python-source filter pushdown, and the Python data-source
-    registration would otherwise be LOST — a loop frame whose first
-    action scans a nanos-timestamp parquet under the clone would
-    throw). The caller's current time zone is then re-applied, and on
-    top of that the loop overrides:
+    confs only, so runtime confs like nanos-as-long parquet reading
+    and python-source filter pushdown would otherwise be LOST — a loop
+    frame whose first action scans a nanos-timestamp parquet under the
+    clone would throw). The caller's current time zone is then
+    re-applied, and on top of that the loop overrides:
 
     * ``skew_join=False`` (default): ``spark.sql.adaptive.enabled=
       false`` — each iteration is a fixed-shape micro-job (one
@@ -205,10 +199,14 @@ def warm_streaming(spark: SparkSession, timeout_s: int = 60) -> None:
     drain into a no-op sink. Shared by bench.py's warmup phase and
     tools/profile_entry.py so the first streaming entry measured never
     absorbs it. A drain that outlives ``timeout_s`` is stopped before
-    its checkpoint dir is removed."""
+    its checkpoint dir is removed. It also registers the ``snapshot``
+    sources, paying Spark's one-time Python lookup (~2 s) here."""
     import shutil
     import tempfile
 
+    from .sources.pydatasource import register_datasources
+
+    register_datasources(spark)
     ck = tempfile.mkdtemp(prefix="warm_stream_ck_")
     try:
         q = (

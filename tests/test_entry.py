@@ -74,23 +74,36 @@ def test_first_50_entries_cover_every_family():
     assert len(names) == 50
 
 
-def test_queries_runnable_at_smoke_scale(spark):
+def test_queries_runnable_at_smoke_scale(spark, capsys):
     # every registered query must at least build a plan and return a
     # schema. Entries run from a small driver thread pool: each writes
     # only under its own per-entry root, so they are independent jobs
     # the scheduler can overlap (optimization guide §2.6) — identical
     # coverage, a fraction of the sequential wall (this is the suite's
-    # single longest test)
+    # single longest test). Each entry's wall time (overlapped with up
+    # to three others) is recorded and the 15 slowest are printed past
+    # pytest's output capture.
+    import time
     from concurrent.futures import ThreadPoolExecutor
+
+    walls = {}
 
     def build(item):
         name, fn = item
+        t0 = time.perf_counter()
         df = fn(spark, SF_SMOKE)
+        walls[name] = time.perf_counter() - t0
         assert df.schema is not None, name
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        for _ in pool.map(build, list(entrymod.queries().items())):
-            pass
+    try:
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            for _ in pool.map(build, list(entrymod.queries().items())):
+                pass
+    finally:
+        with capsys.disabled():
+            print(f"\nslowest smoke entries (of {len(walls)}, pool of 4):")
+            for name, wall in sorted(walls.items(), key=lambda kv: -kv[1])[:15]:
+                print(f"  {wall:7.2f}s  {name}")
 
 
 def test_sql_entry_point_over_views(spark):

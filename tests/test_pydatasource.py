@@ -237,3 +237,34 @@ def test_stream_default_start_is_current(spark, table):
     assert sorted(rows) == sorted(
         (k, float(k), "a", "insert", table.version) for k in (2000, 2001)
     )
+
+
+def test_only_the_reader_registers_the_sources(spark, monkeypatch):
+    """The session helpers register no Python data source (Spark's first
+    registration in a process forks a Python lookup); the snapshot
+    formats' readers call ``register_datasources``, which registers
+    exactly those two formats."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    from predicting_hospital_readmission_using_mimic_database_spark.session import (
+        loop_session,
+        small_plan_spark,
+        tune_session,
+    )
+    from predicting_hospital_readmission_using_mimic_database_spark.sources.io import read_table
+    from tests.conftest import SF_SMOKE
+
+    names = []
+    monkeypatch.setattr(
+        DataSourceRegistration, "register", lambda _self, ds: names.append(ds.name())
+    )
+    tune_session(spark)
+    clone = small_plan_spark(spark, est_bytes=1)
+    assert clone is not spark
+    with loop_session(spark.range(3)) as (_sess, (frame,)):
+        assert frame.count() == 3
+    read_table(spark, SF_SMOKE, "customer").limit(1).collect()
+    read_table(clone, SF_SMOKE, "customer").limit(1).collect()
+    assert names == []
+    register_datasources(spark)
+    assert names == ["snapshot", "snapshot_changes"]
